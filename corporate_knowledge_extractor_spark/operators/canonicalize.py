@@ -115,6 +115,21 @@ def contract_edges_locally(
     return ranged.mapInPandas(_uf, schema=edges.select("id_a", "id_b").schema)
 
 
+def _symmetrize(edges: DataFrame) -> DataFrame:
+    """Undirected (id_a, id_b) edges -> distinct directed (src, dst) rows,
+    both directions of every edge. One explode over a two-element array
+    reads ``edges`` once; a union of the two projections read it twice,
+    so an unmaterialized upstream (the local contraction's mapInPandas
+    union-find) ran twice."""
+    both = F.array(
+        F.struct(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
+        F.struct(F.col("id_b").alias("src"), F.col("id_a").alias("dst")),
+    )
+    return (
+        edges.select(F.explode(both).alias("_e")).select("_e.src", "_e.dst").distinct()
+    )
+
+
 def _neighbor_labels(sym_cold, sym_hot, labels, hot_keys, buckets: int) -> DataFrame:
     """One propagation round: candidate label for dst = label of each
     neighbor src — cold keys via plain equi-join, hot keys via the salted
@@ -174,15 +189,18 @@ def connected_components(
     so deep graphs stay bounded too.
 
     Scratch lifecycle: at convergence the labels are consolidated into
-    ``scratch/labels_final`` (the returned frame's only on-disk
-    dependency) and every other scratch table (sym, labels0, round cuts)
-    is deleted immediately; when no ``scratch_dir`` was supplied the
+    ``scratch/labels_final``, one unpartitioned parquet table and the
+    returned frame's only on-disk dependency (no reader filters it by
+    component: id-keyed lookups prune the bucketed ``nodes``/``edges``
+    outputs instead), and every other scratch table (sym, labels0, round
+    cuts) is deleted immediately; when no ``scratch_dir`` was supplied the
     remaining dir is also removed at interpreter exit. Callers that pass
     a ``scratch_dir`` own labels_final's lifetime (delete it once the
     returned frame is released or written out).
 
     ``on_skew_stats({"max_join_key_rows", "hot_keys", "edges"})``
-    (optional, one extra aggregate job) records the worst per-join-key
+    (optional; an extra aggregate job plus the symmetric edge count,
+    which nothing else needs) records the worst per-join-key
     reducer load *after* the hot/cold split — the skew evidence. The
     census is loop-invariant (edges never change across rounds), so it is
     measured once, not per round; a per-partition row count would be
@@ -231,16 +249,7 @@ def connected_components(
         # contract BEFORE the symmetrize cut so the forest (not the raw
         # edge list) is what lands in scratch and feeds every round
         edges = contract_edges_locally(edges)
-    sym = materialize(
-        _cut(
-            edges.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-            .unionByName(
-                edges.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
-            )
-            .distinct(),
-            "sym",
-        )
-    )
+    sym = materialize(_cut(_symmetrize(edges), "sym"))
 
     # static hot/cold split on src degree (the join key's fan-out); edges
     # never change across rounds, so the census and both halves are
@@ -262,10 +271,6 @@ def connected_components(
             add_salt(sym.join(hot_keys, "src", "left_semi"), ["dst"], cfg.salt_buckets)
         )
 
-    n_edges = sym.count()
-    if sym_cold is not sym:
-        # both halves are materialized; the full table is no longer scanned
-        release(sym)
     if on_skew_stats is not None:
         cold_loads = sym_cold.groupBy("src").agg(F.count(F.lit(1)).alias("_n"))
         loads = cold_loads
@@ -279,9 +284,12 @@ def connected_components(
             {
                 "max_join_key_rows": int(mx),
                 "hot_keys": int(n_hot),
-                "edges": n_edges,
+                "edges": sym.count(),
             }
         )
+    if sym_cold is not sym:
+        # both halves are materialized; the full table is no longer scanned
+        release(sym)
 
     labels = materialize(
         _cut(
@@ -396,22 +404,7 @@ def connected_components(
             # labels' recompute lineage pointed at can be deleted NOW —
             # the unbounded temp-disk growth across repeated runs goes
             # away, bounded by the single small labels_final per run
-            # labels_final is the durable output a caller keeps: write it
-            # bucketed by component range (GRAPH_BUCKETS) so an id-keyed
-            # reader ("which entities share this canonical id?") prunes
-            # to one partition dir instead of scanning all labels; the
-            # returned frame projects the bucket back out (schema
-            # contract unchanged)
-            path = f"{scratch}/labels_final"
-            (
-                labels.withColumn("_comp_bucket", cid_bucket(F.col("component")))
-                .write.mode("overwrite")
-                .partitionBy("_comp_bucket")
-                .parquet(path)
-            )
-            final = materialize(
-                spark.read.parquet(path).select("entity_id", "component")
-            )
+            final = materialize(_cut(labels, "labels_final"))
             release(labels)
             _scrub_scratch(keep="labels_final")
             return final
@@ -431,8 +424,8 @@ def connected_components(
     )
 
 
-# canonical-id range buckets for the OUTPUT graph tables (nodes, edges,
-# labels_final): downstream graph queries are id-keyed ("edges into this
+# canonical-id range buckets for the OUTPUT graph tables (nodes, edges):
+# downstream graph queries are id-keyed ("edges into this
 # canonical entity", "this entity's node row"), and at 100 TB an
 # unpartitioned edges table forces a full scan per lookup. pmod of the
 # 64-bit id is a uniform range bucket; 16 dirs is sandbox-sized (a real

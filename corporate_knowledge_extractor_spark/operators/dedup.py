@@ -26,7 +26,6 @@ from pyspark.sql import functions as F
 from corporate_knowledge_extractor_spark.config import LinkingConfig
 from corporate_knowledge_extractor_spark.materialize import materialize
 from corporate_knowledge_extractor_spark.operators.linking import (
-    minhash_signature,
     shingle_col,
     shingle_hashes,
 )
@@ -152,11 +151,11 @@ def minhash_lsh_pairs(
     corpus size (band explode + bucket groupJoin), exact Jaccard only on
     collided candidates.
 
-    The shingle array is computed ONCE (materialized with the base table)
-    and reused by both the banding pass and the exact-verify join —
-    re-deriving it for verify doubled the dominant cost of the whole job.
-    ``char_shingles=True`` switches to character k-shingles (for short
-    strings like entity surfaces, where word grams are degenerate).
+    The base table caches only the normalized text; the banding pass and
+    the exact-verify join each derive shingles from it (see the round-6
+    shape below). ``char_shingles=True`` switches to character
+    k-shingles (for short strings like entity surfaces, where word grams
+    are degenerate).
     ``hash_fn`` selects the per-shingle hash family: the xxhash64 fast
     path (default) or linking.shingle_hashes_neutral for cross-engine
     certification — both verified to emit the same final pair set

@@ -185,11 +185,11 @@ def lsh_band_keys_from_rows(
 ) -> DataFrame:
     """Banding over pre-exploded ``(id, _s)`` shingle rows — the shared
     machinery behind lsh_band_keys, exposed so callers that can produce
-    shingle rows without materializing per-item arrays (see
-    dedup.minhash_lsh_pairs' window-lead tokenizer) skip the interpreted
-    array build entirely. Duplicate shingle rows are harmless: the
-    signature is a min over permuted hashes, so multiplicity cannot
-    change any minimum, and band keys depend only on the signature."""
+    shingle rows without materializing per-item arrays skip the
+    interpreted array build entirely. Duplicate shingle rows are
+    harmless: the signature is a min over permuted hashes, so
+    multiplicity cannot change any minimum, and band keys depend only on
+    the signature."""
     rows_per_band = cfg.num_hashes // cfg.num_bands
     params = _perm_params(cfg.num_hashes)
     scalar_hash = _SCALAR_HASH.get(hash_fn)

@@ -21,6 +21,18 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory() -> str:
+    """Driver heap when ``SPARK_GRAFT_DRIVER_MEM`` is unset: half the
+    host's physical memory, capped at 48g. A flat 48g on a smaller host
+    lets the heap grow until the kernel's OOM killer ends the JVM."""
+    cap_mb = 48 * 1024
+    try:
+        total_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // (1024 * 1024)
+    except (AttributeError, OSError, ValueError):  # no sysconf on this platform
+        return f"{cap_mb // 1024}g"
+    return f"{min(cap_mb, total_mb // 2)}m"
+
+
 def get_spark(
     app_name: str = "corporate_knowledge_extractor_spark",
     master: str | None = None,
@@ -30,6 +42,8 @@ def get_spark(
     """Build (or fetch) a SparkSession configured for this engine.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
+    The driver heap is ``$SPARK_GRAFT_DRIVER_MEM`` if set, else
+    ``default_driver_memory()``.
     ``shuffle_partitions`` defaults to the local core count so small-scale
     runs are not over-parallelized; on a real cluster pass
     ``executors * cores_per_executor * 2``.
@@ -53,7 +67,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Scan-split packing floor (guide §6). The default 4 MB

@@ -102,6 +102,12 @@ def test_cc_scrubs_scratch_to_labels_final(spark, tmp_path):
     [run1] = os.listdir(scratch)
     assert run1.startswith("run_")
     assert os.listdir(os.path.join(scratch, run1)) == ["labels_final"]
+    # labels_final is one unpartitioned table: no reader prunes it
+    assert not [
+        d
+        for d in os.listdir(os.path.join(scratch, run1, "labels_final"))
+        if d.startswith("_comp_bucket=")
+    ]
     # a second run against the SAME scratch_dir must not clobber the
     # first run's labels_final (the first frame's recompute lineage may
     # still read it)

@@ -181,3 +181,26 @@ def test_graph_output_tables_prune_on_canonical_id(spark, tmp_path):
     assert "PartitionFilters: [isnotnull(_cid_bucket" in nline, nline
     assert npruned.count() == 1
     spark.catalog.clearCache()
+
+
+def test_cc_symmetrize_runs_local_contraction_once(spark):
+    """Symmetrizing the contracted forest must read it once: a union of
+    the forward and reversed projections reuses the range exchange but
+    runs the mapInPandas union-find above it twice."""
+    from corporate_knowledge_extractor_spark.operators.canonicalize import (
+        _symmetrize,
+        contract_edges_locally,
+    )
+
+    e = spark.createDataFrame(
+        [(i, i + 1) for i in range(200)], "id_a long, id_b long"
+    )
+    sym = _symmetrize(contract_edges_locally(e, num_partitions=4))
+    rows = sym.collect()
+    assert len(rows) == 2 * e.count()
+    assert {(r.src, r.dst) for r in rows} == {
+        (r.dst, r.src) for r in rows
+    }, "both directions of every edge"
+    plan = sym._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]  # AQE prints both plans
+    assert final.count("MapInPandas") == 1, plan

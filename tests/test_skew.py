@@ -71,6 +71,8 @@ def test_cc_salted_rounds_on_zipf_graph(spark):
     # the 8 salt buckets — no reducer key ever carries more than ~deg/8
     assert stats, "skew stats hook did not fire"
     assert stats[0]["hot_keys"] >= 1
+    # every undirected edge in both directions (no duplicates, no loops)
+    assert stats[0]["edges"] == 2 * len(edges)
     assert stats[0]["max_join_key_rows"] <= 2 * hub_deg / cfg.salt_buckets
 
 
