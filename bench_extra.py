@@ -22,15 +22,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from bench import HEADLINE  # noqa: E402  (bench.py runs only under __main__)
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
-HEADLINE = [
-    "pricing_summary", "topk_per_group", "running_offset", "interval_join",
-    "asof_join", "runlength_sessions", "sliding_window_rate", "category_argmax",
-    "normalized_dedup", "dedup_exact_clusters", "minhash_neardup",
-    "embedding_topk", "lang_id_confusion", "token_stats",
-]
 
 
 def _steal() -> int:

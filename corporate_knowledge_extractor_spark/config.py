@@ -14,8 +14,6 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field, replace
 
-from corporate_knowledge_extractor_spark.functions import rules
-
 
 @dataclass(frozen=True)
 class AlignmentConfig:
@@ -45,23 +43,6 @@ class MentionConfig:
     # adjacent-mention text-similarity dedup (extractor.py:302-353); None
     # disables the stage — the default contract the P/R oracle mirrors
     dedup_jaccard: float | None = None
-
-
-@dataclass(frozen=True)
-class PostProcessConfig:
-    """Junk filter + merge thresholds — settings.yaml:85-88, filters.yaml."""
-
-    min_explanation_length: int = 30  # post_processor.py:88
-    min_technical_details_length: int = 10  # post_processor.py:96
-    junk_title_patterns: tuple[str, ...] = (
-        # filters.yaml:131-148 spirit: meeting-platform junk -> code junk
-        r"^\s*$",
-        r"thank you",
-        r"copyright",
-        r"all rights reserved",
-        r"auto[- ]?generated",
-        r"do not edit",
-    )
 
 
 @dataclass(frozen=True)
@@ -125,19 +106,12 @@ class RedactionConfig:
     mask_emails: bool = True
     mask_phones: bool = True
     custom_terms: tuple[str, ...] = ()
-    # patterns are *read by redact_expr* (operators/redact.py) — overriding
-    # them changes the plan; defaults are the rules.py constants so the
-    # pandas P/R oracle and the Spark plan agree out of the box
-    name_pattern: str = rules.RE_PERSON_NAME  # dictionary NER stand-in (anonymizer.py:29-33)
-    email_pattern: str = rules.RE_EMAIL  # anonymizer.py:38
-    phone_pattern: str = rules.RE_PHONE  # anonymizer.py:46, anchored to digits
 
 
 @dataclass(frozen=True)
 class EngineConfig:
     alignment: AlignmentConfig = field(default_factory=AlignmentConfig)
     mentions: MentionConfig = field(default_factory=MentionConfig)
-    postprocess: PostProcessConfig = field(default_factory=PostProcessConfig)
     linking: LinkingConfig = field(default_factory=LinkingConfig)
     canonicalize: CanonicalizeConfig = field(default_factory=CanonicalizeConfig)
     redaction: RedactionConfig = field(default_factory=RedactionConfig)

@@ -84,7 +84,6 @@ def align_segments_to_frames(
     stop_words: tuple[str, ...] = (),
     persist: bool = False,
     scratch: list | None = None,
-    _stage: str | None = None,
 ) -> DataFrame:
     """Returns DOC + (seg_id, start, end, speech, slide_text).
 
@@ -98,13 +97,6 @@ def align_segments_to_frames(
     contract mirrors post_process: query-shaped callers free it with
     clearCache; the staged pipeline passes ``scratch`` and releases
     right after the stage write.
-
-    ``_stage`` is a bench/diagnostic hook (scripts/stage_diagnose.py):
-    it returns the operator's OWN intermediate plan at a named point —
-    "closest" (after the as-of sort + both running windows), "scored"
-    (after the candidate equi-join + blended score), "argmax" (after the
-    winner pick, before the text joins) — so per-phase scaling can be
-    measured on exactly the plan prefixes the full operator executes.
     """
     f = frames.select(
         *DOC,
@@ -234,8 +226,6 @@ def align_segments_to_frames(
         .withColumn("closest_idx", F.lit(0))
     )
     closest_all = matched.unionByName(no_match)
-    if _stage == "closest":
-        return closest_all
 
     # ---- step 2: candidate window as a bounded equi-join ---------------
     base = s_feat.join(closest_all, [*DOC, "seg_id"])
@@ -294,8 +284,6 @@ def align_segments_to_frames(
     # fallback's closest-frame text.
     seg_keys = [*DOC, "seg_id"]
     real = cand.select(*seg_keys, "f_idx", score.alias("_score"))
-    if _stage == "scored":
-        return real
     fallback = base.select(
         *seg_keys,
         F.col("closest_idx").alias("f_idx"),
@@ -323,8 +311,6 @@ def align_segments_to_frames(
             ).alias("f_idx")
         )
     )
-    if _stage == "argmax":
-        return winners
     # texts re-attached to the ONE winning row per segment: slide_text on
     # (doc, f_idx), speech/start/end on (doc, seg_id). The winners frame
     # leaves the argmax window already hash-partitioned by (doc, seg_id),

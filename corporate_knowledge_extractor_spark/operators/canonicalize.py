@@ -36,6 +36,7 @@ and both halves are materialized eagerly so every round reuses them.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -255,8 +256,12 @@ def connected_components(
     # never change across rounds, so the census and both halves are
     # computed exactly once
     degrees = sym.groupBy("src").agg(F.count(F.lit(1)).alias("_deg"))
-    hot_keys = materialize(
-        degrees.where(F.col("_deg") >= cfg.hot_degree_threshold).select("src")
+    # lazy persist whose one count both fills the cache and sizes the
+    # split (materialize() would count it a second time)
+    hot_keys = (
+        degrees.where(F.col("_deg") >= cfg.hot_degree_threshold)
+        .select("src")
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     n_hot = hot_keys.count()
     if n_hot == 0:
@@ -302,7 +307,6 @@ def connected_components(
         release(sym_hot, hot_keys)
         release(sym_cold)  # == sym when there was no hot split
 
-    from pyspark import StorageLevel
     from pyspark.sql import Observation
 
     # The lineage-cut budget is denominated in HOPS, not driver rounds:

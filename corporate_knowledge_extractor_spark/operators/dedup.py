@@ -26,8 +26,8 @@ from pyspark.sql import functions as F
 from corporate_knowledge_extractor_spark.config import LinkingConfig
 from corporate_knowledge_extractor_spark.materialize import materialize
 from corporate_knowledge_extractor_spark.operators.linking import (
+    hash_one_shingle,
     shingle_col,
-    shingle_hashes,
 )
 
 
@@ -130,7 +130,7 @@ DOC_DEDUP_CFG = LinkingConfig(num_hashes=32, num_bands=8, shingle_size=3)
 # 8 bands x 4 rows -> s-curve threshold (1/8)^(1/4) ~ 0.59, matched to the
 # 0.6 exact-verify threshold. Word 3-gram shingles (not character 5-grams):
 # a document has ~10x fewer word-shingles than char-shingles, and the
-# signature stage (num_hashes interpreted array_min folds per doc) is
+# signature stage (num_hashes min() aggregates over every shingle row) is
 # linear in num_hashes x shingles — the combined 2x fewer hashes + 10x
 # fewer shingles cut the sf0.1 minhash_neardup wall from 43s to ~3s with
 # the same near-dup semantics the reference's word-overlap similarity
@@ -144,7 +144,7 @@ def minhash_lsh_pairs(
     cfg: LinkingConfig = DOC_DEDUP_CFG,
     threshold: float = 0.6,
     char_shingles: bool = False,
-    hash_fn=shingle_hashes,
+    hash_fn=hash_one_shingle,
 ) -> DataFrame:
     """MinHash+LSH near-dup pairs over word n-gram shingles of the
     normalized text — the scale path: candidate generation is linear in
@@ -156,10 +156,10 @@ def minhash_lsh_pairs(
     shape below). ``char_shingles=True`` switches to character
     k-shingles (for short strings like entity surfaces, where word grams
     are degenerate).
-    ``hash_fn`` selects the per-shingle hash family: the xxhash64 fast
-    path (default) or linking.shingle_hashes_neutral for cross-engine
-    certification — both verified to emit the same final pair set
-    (tests/test_dedup_similarity.py).
+    ``hash_fn`` is the scalar per-shingle hash: linking.hash_one_shingle
+    (xxhash64, the default) or linking.hash_one_shingle_neutral, the
+    engine-neutral md5 reference — both verified to emit the same final
+    pair set (tests/test_dedup_similarity.py).
 
     Round-6 shape (guide §4.1, §5): the shingle array is a single
     codegen'd regex pass (see word_shingles), cheap enough that the base

@@ -7,9 +7,10 @@ alias variants (`get_user_data` / `getUserData` / `get_user_data_v2`), so
 per BASELINE.json this generalizes to MinHash-LSH blocking + a Jaccard
 scorer over candidate pairs.
 
-Everything here is native column expressions — shingles via
-`transform(sequence(...))`, per-permutation min-hash via
-`array_min(transform(...))`, band keys via `xxhash64` — no Python at all.
+Everything here is native column expressions, no Python at all:
+shingles via `transform(sequence(...))`, the per-permutation min-hash as
+a scalar hash on exploded shingle rows folded by codegen'd `min()`
+aggregates, band keys via `xxhash64`.
 The O(n^2) similarity join becomes O(sum of block^2) with blocks bounded
 by `max_block_size` (Zipfian hot-block skew control; precedent:
 the reference's max_total row cap, src/frames/extractor.py:152-154).
@@ -21,11 +22,10 @@ spark.sql.ansi.enabled=true, where overflow *throws*).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window as W
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from corporate_knowledge_extractor_spark.config import LinkingConfig
-from corporate_knowledge_extractor_spark.functions import rules
 
 _P = 2_147_483_647  # Mersenne prime 2^31 - 1
 
@@ -86,61 +86,16 @@ def hash_one_shingle(col: F.Column) -> F.Column:
 
 
 def hash_one_shingle_neutral(col: F.Column) -> F.Column:
-    """Scalar engine-neutral twin: md5-hex prefix -> int, same domain."""
+    """Scalar engine-neutral twin: md5-hex prefix -> int, same domain.
+    Slower than xxhash64 (string hashing + base conversion) but
+    reproducible in ANY engine — tests/test_dedup_similarity.py proves
+    the xxhash64 fast path emits the SAME near-dup pairs as this path
+    end-to-end (candidates differ only in LSH banding randomness; the
+    exact-Jaccard verify makes the surviving pair set hash-independent
+    whenever banding recall holds)."""
     return F.pmod(
         F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long"), F.lit(_P)
     )
-
-
-def minhash_signature(shingle_hashes: F.Column, cfg: LinkingConfig) -> F.Column:
-    """array<long> of length num_hashes: min over shingles of an affine
-    permutation of the pre-hashed shingles, all JVM-side.
-
-    Takes the *hash array* (not the raw shingles) so callers materialize
-    the per-shingle xxhash64 exactly once as a column — with the hashes
-    inlined, whole-stage codegen re-evaluated the hashing inside every one
-    of the 64 array_min branches (measured 64x overhead at sf0.1).
-
-    Kept as the array-level reference form (parity tests state the
-    construction against DuckDB with it); the hot path in lsh_band_keys
-    computes the identical minima via explode + codegen'd min aggregates
-    instead, because these transform/array_min lambdas are interpreted.
-    """
-    sig = [
-        F.array_min(
-            F.transform(
-                shingle_hashes, lambda h: (h * F.lit(a_i) + F.lit(b_i)) % F.lit(_P)
-            )
-        )
-        for a_i, b_i in _perm_params(cfg.num_hashes)
-    ]
-    return F.array(*sig)
-
-
-def shingle_hashes(shingles: F.Column) -> F.Column:
-    """Per-shingle 31-bit base hashes (ANSI-overflow-safe domain)."""
-    return F.transform(shingles, hash_one_shingle)
-
-
-def shingle_hashes_neutral(shingles: F.Column) -> F.Column:
-    """Engine-neutral twin of `shingle_hashes`: md5-hex prefix -> int,
-    reduced to the same 31-bit domain. Slower than xxhash64 (string
-    hashing + base conversion) but reproducible in ANY engine — the
-    certification path: minhash_parity proves the min-over-hash
-    construction against DuckDB with this hash family, and
-    tests/test_dedup_similarity.py proves the xxhash64 fast path emits
-    the SAME near-dup pairs as this path end-to-end (candidates differ
-    only in LSH banding randomness; the exact-Jaccard verify makes the
-    surviving pair set hash-independent whenever banding recall holds)."""
-    return F.transform(shingles, hash_one_shingle_neutral)
-
-
-# array-level seam -> scalar twin, so lsh_band_keys can keep its public
-# hash_fn contract while hashing on the exploded (codegen'd) column
-_SCALAR_HASH = {
-    shingle_hashes: hash_one_shingle,
-    shingle_hashes_neutral: hash_one_shingle_neutral,
-}
 
 
 def lsh_band_keys(
@@ -148,9 +103,13 @@ def lsh_band_keys(
     id_col: str,
     shingles: F.Column,
     cfg: LinkingConfig = LinkingConfig(),
-    hash_fn=shingle_hashes,
+    hash_fn=hash_one_shingle,
 ) -> DataFrame:
     """(band_key, id) — one row per band per item, *ids only*.
+
+    ``hash_fn`` is the scalar per-shingle hash: `hash_one_shingle`
+    (xxhash64, the default) or `hash_one_shingle_neutral` (the
+    engine-neutral md5 reference).
 
     Payload columns (shingle arrays, surfaces) are deliberately NOT
     carried: the band explode amplifies rows num_bands-fold and the
@@ -166,39 +125,19 @@ def lsh_band_keys(
     before any exchange, and every expression in the pass is
     whole-stage-codegen. The previous form (num_hashes interpreted
     array_min(transform(...)) passes per row) measured 3-5x slower on
-    the sf1.0 bench corpus (scripts/exp_minhash_r06.py; identical final
-    pair set asserted there). Items whose shingle array is empty would
-    vanish at the explode; they produce no band keys either way (an
-    empty array has no minima), and word_shingles/shingle_col always
-    emit at least one shingle, so the pair sets are identical.
+    the sf1.0 bench corpus with an identical final pair set
+    (OPTIMIZATION_r06.md "minhash_neardup"). Items whose shingle array
+    is empty vanish at the explode; they produce no band keys either way
+    (an empty array has no minima), and word_shingles/shingle_col always
+    emit at least one shingle, so the pair sets are identical. Duplicate
+    shingles are harmless: the signature is a min over permuted hashes,
+    so multiplicity cannot change any minimum.
     """
-    exploded = items.select(
-        F.col(id_col).alias("id"), F.explode(shingles).alias("_s")
-    )
-    return lsh_band_keys_from_rows(exploded, cfg, hash_fn=hash_fn)
-
-
-def lsh_band_keys_from_rows(
-    shingle_rows: DataFrame,
-    cfg: LinkingConfig = LinkingConfig(),
-    hash_fn=shingle_hashes,
-) -> DataFrame:
-    """Banding over pre-exploded ``(id, _s)`` shingle rows — the shared
-    machinery behind lsh_band_keys, exposed so callers that can produce
-    shingle rows without materializing per-item arrays skip the
-    interpreted array build entirely. Duplicate shingle rows are
-    harmless: the signature is a min over permuted hashes, so
-    multiplicity cannot change any minimum, and band keys depend only on
-    the signature."""
     rows_per_band = cfg.num_hashes // cfg.num_bands
     params = _perm_params(cfg.num_hashes)
-    scalar_hash = _SCALAR_HASH.get(hash_fn)
-    if scalar_hash is not None:
-        hashed = shingle_rows.select("id", scalar_hash(F.col("_s")).alias("_h"))
-    else:  # unknown array-level hash family: hash per row via a 1-element array
-        hashed = shingle_rows.select(
-            "id", F.element_at(hash_fn(F.array(F.col("_s"))), 1).alias("_h")
-        )
+    hashed = items.select(
+        F.col(id_col).alias("id"), F.explode(shingles).alias("_s")
+    ).select("id", hash_fn(F.col("_s")).alias("_h"))
     sigs = hashed.groupBy("id").agg(
         *[
             F.min((F.col("_h") * F.lit(a_i) + F.lit(b_i)) % F.lit(_P)).alias(f"_m{i}")

@@ -9,8 +9,6 @@ remaining steps run here on the triples table.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -29,15 +27,14 @@ def dedup_triples(triples: DataFrame) -> DataFrame:
     earliest row per key is min_by(payload, struct(line_no, frame_id)) —
     (line_no, frame_id) is unique within a document (frame_id is the
     per-doc mention index), so the minimum IS the row_number()=1 row of
-    the window form this replaces. min_by aggregates hash-based
-    (ObjectHashAggregate — a min over a struct-typed column would fall
-    back to SortAggregate and reintroduce two sorts) and partially
-    map-side, so at most one candidate row per (input partition, key)
-    crosses any exchange — and when the input already clusters by the
-    doc key (synthesize_triples preserves it), the whole dedup runs in
-    place with no exchange and no sort at all; the window form shuffled
-    and sorted the full pre-dedup triple set (measured 1.1 GB at
-    sf1.0)."""
+    the window form this replaces. The struct-typed buffers plan as
+    SortAggregate: the executed plan is one local Sort -> SortAggregate
+    (partial) -> SortAggregate (final). The partial step runs map-side,
+    so at most one candidate row per (input partition, key) crosses any
+    exchange — and when the input already clusters by the doc key
+    (synthesize_triples preserves it), the final step follows with no
+    exchange and no second sort; the window form shuffled and sorted the
+    full pre-dedup triple set (measured 1.1 GB at sf1.0)."""
     # whitespace-guarded normalization: trim(regexp_replace(lower(c),
     # '\s+', ' ')) is exactly lower(c) when the string contains no
     # whitespace (replace is a no-op, nothing to trim) — and triple
@@ -73,10 +70,8 @@ def dedup_triples(triples: DataFrame) -> DataFrame:
 # broadcast the known-surfaces dim only when its MEASURED row count is
 # below this (distinct identifiers are short strings; 1M rows is a few
 # tens of MB framed — far under the session's 64 MB auto threshold and
-# the executor budget). Parameterised for deployments with bigger heads.
-KNOWN_BROADCAST_MAX_ROWS = int(
-    os.environ.get("SPARK_GRAFT_KNOWN_BCAST_ROWS", str(1_000_000))
-)
+# the executor budget)
+KNOWN_BROADCAST_MAX_ROWS = 1_000_000
 
 
 def validate_calls(
@@ -136,7 +131,8 @@ def categorize(triples: DataFrame) -> DataFrame:
     (score, -order, name) structs — one expression, no join, no UDF."""
     # per-category score as a plain codegen'd sum of contains() casts —
     # the filter(array(keywords), ...) lambda form is interpreted
-    # (guide §4.1); identical counts asserted in scripts/exp_langid_r06.py
+    # (guide §4.1); identical counts recorded in OPTIMIZATION_r06.md
+    # "category_argmax"
     scored = F.array(
         *[
             F.struct(

@@ -29,44 +29,29 @@ def _guarded_replace(col: Column, guard: Column, pattern: str, mask: str) -> Col
     string). On identifier-shaped columns the guard rejects ~95%+ of
     rows with a codegen'd scan instead of a Matcher run per pattern —
     measured ~2x less CPU on the extract's surface redaction at sf1.0
-    (guide §1.2 per-task work; scripts/exp_redact_r06b.py)."""
+    (guide §1.2 per-task work; OPTIMIZATION_r06.md "Second pass" item 3)."""
     return F.when(guard, F.regexp_replace(col, pattern, mask)).otherwise(col)
 
 
 def redact_expr(col: Column, cfg: RedactionConfig = RedactionConfig()) -> Column:
-    """The anonymize() chain as a single column expression. Patterns come
-    from the config (defaults mirror functions/rules.py) so deployments
-    can override them per-preset — overriding a config field must never
-    be a silent no-op.
+    """The anonymize() chain as a single column expression. Patterns are
+    the functions/rules.py constants, shared with the pandas P/R oracle
+    and the oracle SQL; the config chooses which masks run and adds
+    custom terms.
 
-    Each default pattern has a necessary character its guard tests: the
+    Each pattern has a necessary character its guard tests: the
     dictionary name pattern contains a literal space, an email match
-    requires '@', and the phone pattern's first atom is a digit. A
-    caller overriding a pattern via cfg gets the unguarded form (the
-    guard is only valid for the default patterns it was proven against).
+    requires '@', and the phone pattern's first atom is a digit.
     """
     out = col
     if cfg.mask_names:
-        if cfg.name_pattern is rules.RE_PERSON_NAME:
-            out = _guarded_replace(
-                out, out.contains(" "), cfg.name_pattern, rules.MASK_PERSON
-            )
-        else:
-            out = F.regexp_replace(out, cfg.name_pattern, rules.MASK_PERSON)
+        out = _guarded_replace(
+            out, out.contains(" "), rules.RE_PERSON_NAME, rules.MASK_PERSON
+        )
     if cfg.mask_emails:
-        if cfg.email_pattern is rules.RE_EMAIL:
-            out = _guarded_replace(
-                out, out.contains("@"), cfg.email_pattern, rules.MASK_EMAIL
-            )
-        else:
-            out = F.regexp_replace(out, cfg.email_pattern, rules.MASK_EMAIL)
+        out = _guarded_replace(out, out.contains("@"), rules.RE_EMAIL, rules.MASK_EMAIL)
     if cfg.mask_phones:
-        if cfg.phone_pattern is rules.RE_PHONE:
-            out = _guarded_replace(
-                out, out.rlike("[0-9]"), cfg.phone_pattern, rules.MASK_PHONE
-            )
-        else:
-            out = F.regexp_replace(out, cfg.phone_pattern, rules.MASK_PHONE)
+        out = _guarded_replace(out, out.rlike("[0-9]"), rules.RE_PHONE, rules.MASK_PHONE)
     for term in cfg.custom_terms:
         # anonymizer.py:52-59: literal, case-insensitive
         escaped = "".join("\\" + c if not c.isalnum() else c for c in term)

@@ -69,8 +69,9 @@ def _hits_text(col: F.Column, words: tuple[str, ...]) -> F.Column:
     filter(tokens, t -> array_contains(...)) lambda (`_hits`) on hot
     paths — higher-order lambdas are not codegen'd (guide §4.1); measured
     ~1.5x on the sf1.0 lang_id_confusion query with identical output
-    (scripts/exp_langid_r06.py). Assumes words are literal (no regex
-    metacharacters), which every stopword list here satisfies."""
+    (OPTIMIZATION_r06.md "lang_id_confusion"). Assumes words are
+    literal (no regex metacharacters), which every stopword list here
+    satisfies."""
     norm = F.trim(F.regexp_replace(F.lower(col), r"\s+", " "))
     pat = "(?:^|(?<= ))(?:" + "|".join(words) + ")(?= |$)"
     return F.regexp_count(norm, F.lit(pat))

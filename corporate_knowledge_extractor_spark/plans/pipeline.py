@@ -113,8 +113,8 @@ def extract_triples(docs: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG,
     # fewer rows, no per-line key duplication), and Generate preserves
     # the partitioning so every downstream window/join still reuses it.
     # Measured result-identical, ~5% less CPU at sf1.0 locally
-    # (scripts/exp_docshuffle_r06b.py); the row-count win is the point
-    # at network-shuffle scale.
+    # (OPTIMIZATION_r06.md "Second pass" item 2); the row-count win is
+    # the point at network-shuffle scale.
     blocked = junk_block_filter(
         assign_blocks(split_lines(docs.repartition(*DOC_KEY)))
     )

@@ -179,7 +179,8 @@ def category_argmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents", fanout=True)
     # per-category score as a plain codegen'd sum of contains() casts —
     # the filter(array(keywords), ...) lambda form is interpreted
-    # (guide §4.1); identical counts asserted in scripts/exp_langid_r06.py
+    # (guide §4.1); identical counts recorded in OPTIMIZATION_r06.md
+    # "category_argmax"
     scored = F.array(
         *[
             F.struct(

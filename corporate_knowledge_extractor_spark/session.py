@@ -81,12 +81,9 @@ def get_spark(
         # keeps tiny-file padding meaningful while letting a small
         # compute-heavy file fan out to the full parallelism; at real
         # scale bytesPerCore >> openCost so the value is inert there
-        # (parameterised for deployments where per-file open cost is
-        # genuinely high, e.g. object stores: raise via env).
-        .config(
-            "spark.sql.files.openCostInBytes",
-            os.environ.get("SPARK_GRAFT_OPEN_COST_BYTES", str(128 * 1024)),
-        )
+        # (deployments where per-file open cost is genuinely high, e.g.
+        # object stores, raise it through extra_conf).
+        .config("spark.sql.files.openCostInBytes", str(128 * 1024))
         # Accept subset-key co-partitioning for joins (guide §2.4): the
         # extract pipeline clusters everything by the document key once
         # and every later join/aggregation keys on (doc, ...) supersets.

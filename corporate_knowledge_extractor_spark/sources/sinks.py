@@ -16,13 +16,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-try:  # pragma: no cover - not available in the sandbox image
-    from pyspark.sql.utils import AnalysisException  # noqa: F401
-
-    _ICEBERG = False  # would probe spark.conf for the iceberg catalog
-except Exception:  # pragma: no cover
-    _ICEBERG = False
-
 
 def table_exists(spark: SparkSession, path: str) -> bool:
     return os.path.isdir(path) and os.path.exists(os.path.join(path, "_SUCCESS"))
@@ -47,10 +40,8 @@ def read_table(spark: SparkSession, path: str) -> DataFrame:
 # Fan-out ceiling for the post-read repartition below. Tables above it
 # are assumed to arrive with enough native splits (row groups) to feed
 # the cluster; at real scale every table clears this bar and the branch
-# is inert. Parameterised so a deployment can disable (0) or retune it.
-_FANOUT_MAX_BYTES = int(
-    os.environ.get("SPARK_GRAFT_FANOUT_MAX_BYTES", str(64 * 1024 * 1024))
-)
+# is inert. Callers that want native splits pass fanout=False.
+_FANOUT_MAX_BYTES = 64 * 1024 * 1024
 
 
 def _table_bytes(path: str) -> int:
@@ -84,7 +75,7 @@ def load_testdata(
     exchange IS the scan task either way, and the extra round-robin hop
     measurably lost time (dedup_exact_clusters +0.5 s at sf1.0). Tables
     above _FANOUT_MAX_BYTES keep their native splits — at 100-TB scale
-    the branch is inert and the cap is env-tunable."""
+    the branch is inert."""
     path = f"{sf_dir.rstrip('/')}/{name}.parquet"
     df = spark.read.parquet(path)
     if not fanout:

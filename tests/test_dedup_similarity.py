@@ -248,7 +248,7 @@ def test_minhash_fast_path_pairs_equal_neutral_and_bruteforce(spark):
     verify makes the output hash-independent as long as LSH recall
     holds, and here it is proven to hold exactly."""
     from corporate_knowledge_extractor_spark.operators.linking import (
-        shingle_hashes_neutral,
+        hash_one_shingle_neutral,
     )
 
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
@@ -260,7 +260,7 @@ def test_minhash_fast_path_pairs_equal_neutral_and_bruteforce(spark):
     neutral = {
         (r.id_a, r.id_b, r.jaccard)
         for r in dedup.minhash_lsh_pairs(
-            docs, threshold=0.6, hash_fn=shingle_hashes_neutral
+            docs, threshold=0.6, hash_fn=hash_one_shingle_neutral
         ).collect()
     }
     spark.catalog.clearCache()

@@ -108,6 +108,40 @@ def test_redaction_chain_order(spark):
     assert texts[3] == "[REDACTED] is secret"
 
 
+def test_guarded_redaction_equals_unguarded_chain(spark):
+    """The necessary-condition guards in redact_expr must be invisible:
+    the default chain equals a plain regexp_replace chain over the
+    rules.py patterns in the same order, on inputs near each guard's
+    edge (tab or double space in a name, '@' without a TLD, phone
+    punctuation, non-ASCII digits, an email right before a name)."""
+    from corporate_knowledge_extractor_spark.functions import rules
+
+    edge = [
+        "Alice\tSmith",
+        "Alice  Smith",
+        "Alice Smith",
+        "@",
+        "a@b",
+        "+1 (212) 555-0199",
+        "\u0661\u0662\u0663 \u0664\u0665\u0666 \u0667\u0668\u0669\u0660",
+        "bob.kim@example.org Bob Kim",
+        "",
+        "plain_identifier",
+    ]
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(edge)], "i int, text string")
+    ref = F.col("text")
+    for pattern, mask in (
+        (rules.RE_PERSON_NAME, rules.MASK_PERSON),
+        (rules.RE_EMAIL, rules.MASK_EMAIL),
+        (rules.RE_PHONE, rules.MASK_PHONE),
+    ):
+        ref = F.regexp_replace(ref, pattern, mask)
+    out = redact_columns(df.withColumn("ref", ref), ["text"]).orderBy("i").collect()
+    assert [r.text for r in out] == [r.ref for r in out]
+    assert out[2].text == "[PERSON]"
+    assert out[7].text == "[EMAIL] [PERSON]"
+
+
 TRIPLES_SCHEMA = (
     "repo string, path string, commit string, subj string, pred string, "
     "obj string, frame_id string, line_no int"
