@@ -60,24 +60,7 @@ class LinkingConfig:
 
 @dataclass(frozen=True)
 class CanonicalizeConfig:
-    max_iterations: int = 20  # CC fixpoint bound (SURVEY.md §7 risk)
     salt_buckets: int = 16  # salting fan-out for hot labels
-    # propagation hops chained inside ONE Spark job per CC round: label
-    # mins are monotone, so convergence detection (changed == 0 across
-    # the job) is unaffected by fusing. Measured per-shape (round-5
-    # BENCH/cc_diagnose_r05.json): fusion HURTS shallow graphs (the
-    # pipeline's hub-heavy alias pool, converges in ~4 hops: 6.1 -> 10.7s
-    # at 1 executor — rounds only drop 4 -> 3 while every fused job
-    # doubles shuffle volume and the last one wastes a whole extra hop
-    # past convergence) and PAYS on deep graphs at multi-executor (24-hop
-    # chains: 15.3 -> 11.9s at 4 executors, anti-scaling 0.87 -> 1.22 —
-    # the driver-round latency floor halves). Hence ADAPTIVE fusion:
-    # rounds < fuse_after run one hop per job (shallow graphs never pay
-    # the fused tax), and a graph still unconverged after fuse_after
-    # rounds has proven deep, so its remaining rounds fuse hops_per_job
-    # hops each.
-    hops_per_job: int = 2
-    fuse_after: int = 4
     # partition-local union-find contraction of the edge list before the
     # iterative phase (canonicalize.contract_edges_locally): collapses
     # every within-partition path to depth 1, so the driver-round count

@@ -87,12 +87,3 @@ def categorize_text(text: str) -> str:
             best, best_score = cat, score
     return best
 
-
-def normalize_surface(s: str) -> str:
-    """Entity-linking normalization: casefold + drop separators.
-
-    Generalizes the reference's title normalization (strip digits /
-    punctuation / case, src/output/post_processor.py:113-114) to code
-    identifiers, where digits are significant (`_v2`).
-    """
-    return s.lower().replace("_", "").replace("-", "").strip()

@@ -6,22 +6,24 @@ transitive only through chains (`get_user_data` ~ `getuserdata` ~
 `get_user_data_v2`), so the KG target requires true connected components
 (BASELINE.json north_star).
 
-Implemented as driver-looped min-label propagation: each iteration is one
-shuffle-join round. Materialization follows the repo-wide policy
-(materialize.py): every round's label table is an *eager serialized
+Implemented as driver-looped min-label propagation: each round is one
+propagation hop, one shuffle-join job. Materialization follows the
+repo-wide policy (materialize.py): every round's label table is an *eager serialized
 persist*, and the previous round's table is explicitly released right
 after the convergence count — the textbook iterative-Spark pattern. At
 10^12-vertex scale the per-round label tables are the largest objects in
 the job; localCheckpoint (the round-2 form) leaked every round's table
 until GC because clearCache() does not release checkpoint RDDs.
-Lineage is cut by a parquet round-trip every ``lineage_cut_every``
+Lineage is cut by a parquet round-trip every ``LINEAGE_CUT_EVERY``
 rounds (persist alone does not truncate the logical plan — unbounded
 lineage is the classic iterative-Spark failure mode, SURVEY.md §7); the
 cut is crash-safe reliable storage, which is what a real cluster wants
 anyway. Convergence is detected with a cheap changed-count aggregate and
-the loop is bounded by `max_iterations` with an assert — alias clusters
+the loop is bounded by ``MAX_ROUNDS`` with an assert — alias clusters
 are shallow (diameter ~2-4), so this converges in a handful of rounds
-even at 10^12 scale and the cut rarely fires.
+even at 10^12 scale and the cut rarely fires. Deep graphs (near-dup
+chains) take fewer rounds through partition-local contraction
+(``contract_edges_locally``).
 
 Skew: a Zipf-headed alias graph has hub vertices whose full edge list
 hashes to ONE reducer in each round's plain equi-join (AQE's skew-split
@@ -43,6 +45,18 @@ from pyspark.sql import functions as F
 from corporate_knowledge_extractor_spark.config import CanonicalizeConfig
 from corporate_knowledge_extractor_spark.materialize import materialize, release
 from corporate_knowledge_extractor_spark.operators.skew import add_salt, explode_salt
+
+# CC fixpoint bound (SURVEY.md §7 risk), one hop per round: a component
+# of diameter d converges in d + 1 rounds
+MAX_ROUNDS = 40
+# rounds between parquet cuts of the label lineage. A round references
+# the incoming labels in the cold join and the union, and again in the
+# hot semi-join when there is a hot split, so the plan grows 2x or 3x
+# per round; persist caches blocks, not plans, so only the cut bounds
+# re-analysis. 2^6 and 3^4 both keep it under ~100 copies (3^6 with a
+# hot split ran the 8 GB driver heap out in plan-string generation).
+LINEAGE_CUT_EVERY = 6
+LINEAGE_CUT_EVERY_HOT = 4
 
 
 def contract_edges_locally(
@@ -164,7 +178,6 @@ def connected_components(
     cfg: CanonicalizeConfig = CanonicalizeConfig(),
     on_iteration=None,
     on_skew_stats=None,
-    lineage_cut_every: int = 6,
     scratch_dir: str | None = None,
 ) -> DataFrame:
     """Returns (entity_id, component) with component = min entity_id of the
@@ -178,16 +191,17 @@ def connected_components(
     asserted by tests/test_materialize.py.
 
     Plan contract: the label recurrence references the previous labels
-    twice per round (union + join), so the logical plan DOUBLES per
-    iteration — with a lazy upstream chain (the kg extraction DAG) the
+    twice per round (union + join; three times with a hot split), so the
+    logical plan DOUBLES per iteration — with a lazy upstream chain (the kg extraction DAG) the
     exponential re-analysis OOMs the *driver* within a handful of rounds
     (persist caches blocks, not plans; localCheckpoint hid this in round
     2 at the price of leaked RDDs). Both inputs are therefore cut to
     parquet scans in ``scratch_dir`` once at entry — at 10^12 scale the
     edge/vertex tables live on storage anyway — and the label lineage is
-    re-cut through parquet every ``lineage_cut_every`` rounds (the
-    GraphX/GraphFrames checkpointInterval pattern, reliable + crash-safe)
-    so deep graphs stay bounded too.
+    re-cut through parquet every ``LINEAGE_CUT_EVERY`` rounds
+    (``LINEAGE_CUT_EVERY_HOT`` with a hot split; the GraphX/GraphFrames
+    checkpointInterval pattern, reliable + crash-safe) so deep graphs
+    stay bounded too.
 
     Scratch lifecycle: at convergence the labels are consolidated into
     ``scratch/labels_final``, one unpartitioned parquet table and the
@@ -309,78 +323,29 @@ def connected_components(
 
     from pyspark.sql import Observation
 
-    # The lineage-cut budget is denominated in HOPS, not driver rounds:
-    # the plan grows ~3x per hop (each hop references the incoming
-    # labels in the cold join, hot semi-join, and union), so a fused
-    # round multiplies the tree by ~3^n_hops. Counting ROUNDS against
-    # the interval let hops_per_job=2 grow ~9x per round for the same
-    # 6-round budget — on a deep chain, analysis of round 5's plan
-    # pegged the driver for >19 min on one core at 40g heap (round-5 cc
-    # diagnose) before the first cut ever fired. persist caches blocks,
-    # not plans, so only the parquet cut bounds re-analysis.
-    hops_since_cut = 0
-    for i in range(cfg.max_iterations):
-        # Convergence is FUSED into the propagation aggregate: the old
-        # label rides the union as `_old` (each entity has exactly one
-        # labels row, so min(_old) recovers it), and the changed count is
-        # an `observe` metric collected by the same action that populates
-        # the persist — one job per round, no labels-vs-new_labels join
-        # (the join was a whole extra shuffle+sort per round; at tiny
-        # per-round data the job/stage *count* is the cost that made the
-        # components stage anti-scale with executor count, round-3
-        # stage-scaling evidence).
-        #
-        # `hops_per_job` chains SEVERAL propagation hops inside the one
-        # job (round-5): after the first groupBy every entity row carries
-        # its job-start label in `_old` (non-null exactly once per group),
-        # so the next hop unions fresh neighbor candidates and re-
-        # aggregates without losing it. Label updates are monotone mins,
-        # so `changed == 0` across the whole job means NO hop changed
-        # anything — convergence detection is unaffected. At the small-
-        # graph end this halves the round count against the driver-round
-        # latency floor (the components stage's residual cost, round-4
-        # verdict); at the large end it trades 2 chained shuffles per job
-        # for half the job/commit overhead with identical total shuffle
-        # volume.
+    cut_every = LINEAGE_CUT_EVERY if sym_hot is None else LINEAGE_CUT_EVERY_HOT
+    for i in range(MAX_ROUNDS):
+        # One propagation hop per round. Convergence is FUSED into the
+        # propagation aggregate: the old label rides the union as `_old`
+        # (each entity has exactly one labels row, so min(_old) recovers
+        # it), and the changed count is an `observe` metric collected by
+        # the same action that populates the persist — one job per round,
+        # no labels-vs-new_labels join (the join was a whole extra
+        # shuffle+sort per round; at tiny per-round data the job/stage
+        # *count* is the cost that made the components stage anti-scale
+        # with executor count, round-3 stage-scaling evidence).
         # The persist stays lazy, NOT materialize(): the count below is
         # the sole immediate consumer and populates every partition
         # itself; the eager rule exists for CONCURRENT first consumers.
         obs = Observation()
         comp_type = dict(labels.dtypes)["component"]
         cur = labels.withColumn("_old", F.col("component"))
-        # adaptive fusion (cfg.fuse_after rationale in config.py): one
-        # hop per job while the graph may still be shallow, hops_per_job
-        # once it has proven deep — shallow graphs measured 2x faster
-        # unfused, deep chains ~1.3x faster fused at 4 executors
-        n_hops = 1 if i < cfg.fuse_after else max(1, cfg.hops_per_job)
-        mids = []
-        for h in range(n_hops):
-            nbr = _neighbor_labels(
-                sym_cold, sym_hot, cur, hot_keys, cfg.salt_buckets
-            )
-            cur = (
-                cur.unionByName(
-                    nbr.withColumn("_old", F.lit(None).cast(comp_type))
-                )
-                .groupBy("entity_id")
-                .agg(
-                    F.min("component").alias("component"),
-                    F.min("_old").alias("_old"),
-                )
-            )
-            if h < n_hops - 1:
-                # An intermediate hop feeds THREE consumers inside this
-                # same job (next hop's cold join, its hot semi-join, and
-                # the union) — unpersisted, each re-executes the whole
-                # hop subtree, tripling the stage (measured 15.4 -> 47.8s
-                # at 1 executor, BENCH/stage_scaling_400k_r05_hopsbug.json).
-                # A lazy persist is enough: consumers share one job, so
-                # the first stage to compute a partition caches it and
-                # the rest read blocks. Released right after the count.
-                cur = cur.persist(StorageLevel.MEMORY_AND_DISK)
-                mids.append(cur)
+        nbr = _neighbor_labels(sym_cold, sym_hot, cur, hot_keys, cfg.salt_buckets)
         new_labels = (
-            cur.observe(
+            cur.unionByName(nbr.withColumn("_old", F.lit(None).cast(comp_type)))
+            .groupBy("entity_id")
+            .agg(F.min("component").alias("component"), F.min("_old").alias("_old"))
+            .observe(
                 obs,
                 F.sum(
                     (F.col("component") != F.col("_old")).cast("long")
@@ -390,8 +355,6 @@ def connected_components(
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
         new_labels.count()
-        for m in mids:
-            release(m)
         changed = int(obs.get["changed"] or 0)
         # new_labels is fully materialized, so the previous round's table
         # can be freed NOW — per-iteration, not end-of-job; this is the
@@ -412,19 +375,17 @@ def connected_components(
             release(labels)
             _scrub_scratch(keep="labels_final")
             return final
-        hops_since_cut += n_hops
-        if lineage_cut_every and hops_since_cut >= lineage_cut_every:
+        if (i + 1) % cut_every == 0:
             # deep graph: re-cut the doubling label lineage so analysis
             # cost and recompute chains stay bounded (see plan contract)
             cut = _cut(labels, f"labels_cut_{i + 1}")
             release(labels)
             labels = materialize(cut)
-            hops_since_cut = 0
     _cleanup()
     release(labels)
     _scrub_scratch(keep=None)
     raise AssertionError(
-        f"connected_components did not converge in {cfg.max_iterations} iterations"
+        f"connected_components did not converge in {MAX_ROUNDS} rounds"
     )
 
 

@@ -68,8 +68,8 @@ def dedup_vs_previous_kept(
 ) -> DataFrame:
     """A4 adjacent-pair dedup: keep a row iff its text similarity to the
     previously kept row is below the threshold (extractor.py:302-353,
-    keep rule :346 restricted to the text signal — the pixel signal is
-    the multimodal stub's territory)."""
+    keep rule :346 restricted to the text signal; no pixel signal is
+    computed, as the engine decodes no media)."""
     schema = df.schema
 
     def scan(pdf: pd.DataFrame) -> pd.DataFrame:

@@ -219,13 +219,6 @@ def score_pairs(
     )
 
 
-def link_entities(triples: DataFrame, cfg: LinkingConfig = LinkingConfig()):
-    """Full linking stage: triples -> (entities, scored alias pairs)."""
-    entities = extract_entities(triples)
-    pairs = score_pairs(entity_candidate_pairs(entities, cfg), entities, cfg)
-    return entities, pairs
-
-
 def entity_candidate_pairs(
     entities: DataFrame, cfg: LinkingConfig = LinkingConfig()
 ) -> DataFrame:

@@ -34,8 +34,10 @@ from pyspark.sql import functions as F
 
 from corporate_knowledge_extractor_spark.config import (
     DEFAULT_CONFIG,
+    PRESETS,
     PROFILES,
     EngineConfig,
+    Preset,
     Profile,
 )
 from corporate_knowledge_extractor_spark.corpus import generate_corpus
@@ -157,8 +159,6 @@ class Pipeline:
         profile: str | Profile | None = None,
         preset: str | Preset | None = None,
     ):
-        from corporate_knowledge_extractor_spark.config import PRESETS
-
         self.spark = spark
         self.base_dir = base_dir.rstrip("/")
         self.profile = _resolve_profile(profile)

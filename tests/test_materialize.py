@@ -13,6 +13,8 @@ survive both unpersist and clearCache.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from corporate_knowledge_extractor_spark.config import CanonicalizeConfig
@@ -26,6 +28,23 @@ def _stored_rdds(spark) -> list[str]:
         str(info.name())
         for info in spark.sparkContext._jsc.sc().getRDDStorageInfo()
     ]
+
+
+def _round_recorder(scratch: str):
+    """on_iteration hook recording each round's index and the round
+    lineage cuts (labels_cut_*) on disk in the one run dir under
+    ``scratch`` at that point."""
+    rounds, cuts = [], set()
+
+    def hook(i, changed):
+        rounds.append(i)
+        [run] = os.listdir(scratch)
+        cuts.update(
+            d for d in os.listdir(os.path.join(scratch, run))
+            if d.startswith("labels_cut_")
+        )
+
+    return rounds, cuts, hook
 
 
 def _zipf_graph(spark, n=5_000, hub_deg=1_500):
@@ -63,9 +82,10 @@ def test_cc_releases_all_storage_across_repeated_runs(spark):
     assert _stored_rdds(spark) == []
 
 
-def test_cc_deep_graph_lineage_cut(spark):
-    """A path graph deeper than lineage_cut_every forces the parquet
-    lineage cut to fire mid-convergence; the result must still be the
+def test_cc_deep_graph_lineage_cut(spark, tmp_path):
+    """One propagation hop per round: an n-vertex path takes exactly n
+    rounds (n - 1 hops + the unchanged round), so the parquet lineage cut
+    fires mid-convergence after round 6; the result must still be the
     single full-path component and storage must come back clean."""
     spark.catalog.clearCache()
     n = 12
@@ -73,11 +93,16 @@ def test_cc_deep_graph_lineage_cut(spark):
         [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
     )
     v = spark.range(n).select(F.col("id").alias("entity_id"))
+    scratch = str(tmp_path / "cc_scratch")
+    rounds, cuts, on_iteration = _round_recorder(scratch)
     comp = connected_components(
-        v, e, CanonicalizeConfig(max_iterations=30), lineage_cut_every=3
+        v, e, CanonicalizeConfig(), on_iteration=on_iteration,
+        scratch_dir=scratch,
     )
     labels = {r.entity_id: r.component for r in comp.collect()}
     assert labels == {i: 0 for i in range(n)}
+    assert rounds == list(range(n))
+    assert cuts == {"labels_cut_6"}
     comp.unpersist(blocking=True)
     assert _stored_rdds(spark) == []
 
@@ -88,15 +113,25 @@ def test_cc_scrubs_scratch_to_labels_final(spark, tmp_path):
     on disk; the O(E) sym table, labels0, and any round cuts must be gone
     at return. Unbounded scratch growth across repeated runs in a
     long-lived session was the round-3 ADVICE finding."""
-    import os
-
     v, e = _zipf_graph(spark, n=500, hub_deg=50)
+    # plus a disjoint 8-vertex path (diameter 7): 8 rounds, so a round
+    # lineage cut is written mid-run and must be scrubbed (the hub makes
+    # a hot split: the cut fires every LINEAGE_CUT_EVERY_HOT rounds)
+    e = e.unionByName(
+        spark.createDataFrame(
+            [(i, i + 1) for i in range(500, 507)], "id_a long, id_b long"
+        )
+    )
+    v = spark.range(508).select(F.col("id").alias("entity_id"))
     scratch = str(tmp_path / "cc_scratch")
+    rounds, cuts, on_iteration = _round_recorder(scratch)
     comp = connected_components(
         v, e, CanonicalizeConfig(hot_degree_threshold=25, salt_buckets=4),
-        lineage_cut_every=2, scratch_dir=scratch,
+        on_iteration=on_iteration, scratch_dir=scratch,
     )
-    assert comp.count() == 500
+    assert comp.count() == 508
+    assert len(rounds) == 8
+    assert cuts == {"labels_cut_4"}
     # round-5 contract (ADVICE r04): each run scrubs only its own
     # run-unique subdir, leaving exactly run_*/labels_final
     [run1] = os.listdir(scratch)
@@ -113,14 +148,15 @@ def test_cc_scrubs_scratch_to_labels_final(spark, tmp_path):
     # still read it)
     comp2 = connected_components(
         v, e, CanonicalizeConfig(hot_degree_threshold=25, salt_buckets=4),
-        lineage_cut_every=2, scratch_dir=scratch,
+        scratch_dir=scratch,
     )
-    assert comp2.count() == 500
+    assert comp2.count() == 508
     assert os.path.isdir(os.path.join(scratch, run1, "labels_final"))
     assert len(os.listdir(scratch)) == 2
     # the returned frame must survive recompute from labels_final alone
     comp.unpersist(blocking=True)
     assert comp.where(F.col("component") == 0).count() == 51
+    assert comp.where(F.col("component") == 500).count() == 8
     comp2.unpersist(blocking=True)
     spark.catalog.clearCache()
 
@@ -149,75 +185,6 @@ def test_minhash_and_embedding_blocks_release_via_clearcache(spark):
     assert len(_stored_rdds(spark)) > 0  # the intermediates are persisted...
     spark.catalog.clearCache()
     assert _stored_rdds(spark) == []  # ...and fully releasable
-
-
-def test_cc_hop_fusion_halves_rounds_without_reexecution(spark):
-    """hops_per_job=2 must (a) produce identical labels, (b) roughly
-    halve the driver-sequenced round count, and (c) not re-execute the
-    intermediate hop: the round-5 staged scaling caught the unpersisted
-    intermediate aggregate feeding three consumers inside one job, each
-    recomputing the whole hop subtree (components 15.4 -> 47.8 s at one
-    executor, BENCH/stage_scaling_400k_r05_hopsbug.json). Stage count is
-    the deterministic proxy: fused-and-persisted runs ~2x stages over
-    half the rounds (== the hops=1 total); the re-execution bug tripled
-    the per-job subtree, so a fused total well above the hops=1 total
-    means the persist regressed."""
-    spark.catalog.clearCache()
-    # chains of 8 -> 7 propagation hops, enough rounds for the ratio
-    # to dominate constant setup jobs
-    n, chain = 400, 8
-    v = spark.range(n).select(F.col("id").alias("entity_id"))
-    e = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1) if i % chain != chain - 1],
-        "id_a long, id_b long",
-    )
-    tracker = spark.sparkContext.statusTracker()
-
-    def run(hops, fuse_after=0, tag=""):
-        rounds = []
-        grp = f"cc-hops{hops}{tag}"
-        spark.sparkContext.setJobGroup(grp, "fusion contract")
-        try:
-            comp = connected_components(
-                v, e,
-                # fuse_after=0: fuse from round 0 so the contract below
-                # (halved rounds, bounded stage count) tests PURE fusion,
-                # not the adaptive default's unfused prefix
-                CanonicalizeConfig(
-                    max_iterations=40, hops_per_job=hops,
-                    fuse_after=fuse_after,
-                ),
-                on_iteration=lambda i, c: rounds.append(i),
-            )
-            labels = sorted((r.entity_id, r.component) for r in comp.collect())
-            comp.unpersist(blocking=True)
-        finally:
-            spark.sparkContext.setJobGroup("", "")
-        jobs = tracker.getJobIdsForGroup(grp)
-        stages = sum(
-            len(tracker.getJobInfo(j).stageIds)
-            for j in jobs
-            if tracker.getJobInfo(j) is not None
-        )
-        spark.catalog.clearCache()
-        return labels, len(rounds), stages
-
-    labels1, rounds1, stages1 = run(1)
-    labels2, rounds2, stages2 = run(2)
-    assert labels2 == labels1
-    assert labels1[:chain] == [(i, 0) for i in range(chain)]
-    # 7-hop chains: hops=1 needs 8 rounds (7 + converged check),
-    # hops=2 needs ~4-5 — strictly fewer, roughly half
-    assert rounds2 < rounds1
-    assert rounds2 <= rounds1 // 2 + 2
-    # no re-execution: fused total stays at/below the unfused total
-    # (bugged it was ~2x above; 1.35 leaves slack for AQE variation)
-    assert stages2 <= stages1 * 1.35, (stages1, stages2)
-    # the ADAPTIVE default (unfused prefix, fuse once proven deep) is
-    # label-identical and never needs more rounds than pure unfused
-    labels_a, rounds_a, _ = run(2, fuse_after=4, tag="-adaptive")
-    assert labels_a == labels1
-    assert rounds_a <= rounds1
 
 
 def test_cc_local_contraction_identical_labels_fewer_rounds(spark):
@@ -250,11 +217,9 @@ def test_cc_local_contraction_identical_labels_fewer_rounds(spark):
         spark.catalog.clearCache()
         return out, len(rounds)
 
-    plain, rounds_plain = labels_and_rounds(
-        CanonicalizeConfig(max_iterations=40)
-    )
+    plain, rounds_plain = labels_and_rounds(CanonicalizeConfig())
     contracted, rounds_contracted = labels_and_rounds(
-        CanonicalizeConfig(max_iterations=40, local_contract=True)
+        CanonicalizeConfig(local_contract=True)
     )
     assert contracted == plain
     assert plain[:chain] == [(i, 0) for i in range(chain)]
