@@ -12,7 +12,7 @@ Each field cites the reference value it mirrors (file:line under
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field, replace
+from dataclasses import dataclass, field
 
 
 @dataclass(frozen=True)
@@ -136,103 +136,6 @@ class Preset:
     # still applied to the transcript (audio_only.yaml notes), report
     # built from segments alone
     frames_enabled: bool = True
-
-
-# ---------------------------------------------------------------------
-# Named profiles — the reference's second config surface
-# (/root/reference/config/profiles.yaml:1-17): each profile names a
-# (llm backend, model, anonymize) tuple chosen at run time, orthogonal to
-# the presets' sampling/cap envelopes. The Spark analogue ties the proven
-# synthesis-backend seam (operators/synthesize.py: native expressions vs
-# the byte-equal batched applyInPandas twin standing in for a remote/LLM
-# backend) to the redaction toggle as ONE named unit, selectable on
-# Pipeline / extract_triples exactly like a preset.
-# ---------------------------------------------------------------------
-
-
-@dataclass(frozen=True)
-class Profile:
-    """profiles.yaml row analogue: backend x model tag x anonymize."""
-
-    name: str
-    description: str
-    # "native": fused JVM column expressions (synthesize_triples);
-    # "batched": per-document Arrow batches via applyInPandas
-    # (synthesize_triples_batched) — the seam a remote/LLM backend plugs
-    # into, byte-equal to native under the P/R gate (test_operators.py)
-    backend: str
-    model: str  # descriptive tag (the reference's `model:` field)
-    anonymize: bool  # profiles.yaml `anonymize:` -> redaction pass on/off
-
-    def engine_config(self, base: EngineConfig | None = None) -> EngineConfig:
-        """The profile applied to a base config: anonymize=False swaps in
-        a RedactionConfig with every mask off (redact_expr then compiles
-        to the identity — the redaction pass is genuinely skipped in the
-        plan, not post-filtered)."""
-        base = base if base is not None else DEFAULT_CONFIG
-        if self.anonymize:
-            return base
-        return replace(
-            base,
-            redaction=RedactionConfig(
-                mask_names=False, mask_emails=False, mask_phones=False
-            ),
-        )
-
-    def synthesizer(self):
-        from corporate_knowledge_extractor_spark.operators import synthesize as S
-
-        return (
-            S.synthesize_triples_batched
-            if self.backend == "batched"
-            else S.synthesize_triples
-        )
-
-
-PROFILES: dict[str, Profile] = {
-    # profiles.yaml:3-6 `sensitive: llm ollama, model mistral, anonymize
-    # true` — the local-backend + redaction pairing for sensitive content
-    "sensitive": Profile(
-        name="sensitive",
-        description="batched (pluggable local backend) + full redaction",
-        backend="batched",
-        model="rules-batched-v1",
-        anonymize=True,
-    ),
-    # profiles.yaml:8-11 `standard`
-    "standard": Profile(
-        name="standard",
-        description="native JVM synthesis + full redaction (default)",
-        backend="native",
-        model="rules-native-v1",
-        anonymize=True,
-    ),
-    # profiles.yaml:13-16 `fast: llm gemini, model gemini-flash,
-    # anonymize true` — the reference keeps redaction ON in every profile
-    # (all three rows say `anonymize: true`); fast-ness comes from the
-    # backend/model choice alone. Mirrored exactly: native synthesis is
-    # this engine's fastest backend, redaction stays in the plan.
-    "fast": Profile(
-        name="fast",
-        description="fastest backend (native JVM synthesis) + full redaction",
-        backend="native",
-        model="rules-native-fast-v1",
-        anonymize=True,
-    ),
-    # NOT a reference profile — an extension (documented in COVERAGE.md):
-    # the one plan stage trusted-content runs can legitimately skip is
-    # redaction, and compiling it out (identity redact_expr) is a plan
-    # change no reference profile expresses. Kept as its own named row so
-    # `fast` stays contract-faithful.
-    "trusted": Profile(
-        name="trusted",
-        description="native JVM synthesis, redaction pass compiled out "
-        "(extension beyond profiles.yaml for trusted corpora)",
-        backend="native",
-        model="rules-native-v1",
-        anonymize=False,
-    ),
-}
 
 
 PRESETS: dict[str, Preset] = {

@@ -1,4 +1,4 @@
-"""Explicit skew handling: salted joins and skew diagnostics.
+"""Explicit skew handling: salted joins.
 
 north_rule: "partitioning / shuffle / skew handled explicitly". AQE's
 skew-join splitting handles sort-merge joins automatically at runtime;
@@ -47,16 +47,3 @@ def salted_join(
     f = add_salt(fact, salt_cols, buckets)
     d = explode_salt(dim, buckets)
     return f.join(d, [key, "_salt"], how).drop("_salt")
-
-
-def key_skew_report(df: DataFrame, key_cols: list[str], top: int = 10) -> DataFrame:
-    """Diagnostic: per-key row counts of the heaviest keys plus their share
-    of the table — the measurement that decides whether a join needs
-    salting (feeds the metrics table)."""
-    total = df.count()
-    counts = df.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("rows"))
-    return (
-        counts.orderBy(F.desc("rows"))
-        .limit(top)
-        .withColumn("share", F.round(F.col("rows") / F.lit(float(total)), 6))
-    )

@@ -4,18 +4,15 @@ Reference analogue: the LLM synthesis stage
 (/root/reference/src/synthesize/gemini_backend.py:31-66) that turns
 grouped, aligned records into structured slide_breakdown + qa_pair JSON.
 BASELINE.json replaces the LLM with a deterministic rule extractor; each
-rule below is a native column expression over the mention table, unioned
-into one triples DataFrame — the 1-group -> N-structured-rows shape the
-reference gets from `applyInPandas`-style chunking, here free of Python
-entirely.
+rule below is one branch of a native CASE projection over the mention
+table — the 1-group -> N-structured-rows shape the reference gets from
+per-document chunking, here free of Python entirely.
 
 Triple schema (FIXTURES.md §2): (repo, path, commit, subj, pred, obj,
 frame_id, line_no, category added by postprocess).
 """
 
 from __future__ import annotations
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
@@ -113,64 +110,6 @@ def synthesize_triples(mentions: DataFrame) -> DataFrame:
             F.col("line_no"),
         )
     )
-
-
-TRIPLE_SCHEMA = (
-    "repo string, path string, commit string, subj string, pred string, "
-    "obj string, frame_id string, line_no int"
-)
-
-
-def synthesize_triples_batched(mentions: DataFrame) -> DataFrame:
-    """Alternate synthesis backend: identical triple contract, produced
-    per-document in Arrow batches via ``applyInPandas``.
-
-    The reference swaps LLM backends behind one interface
-    (src/synthesize/base.py BaseSynthesizer; gemini_backend.py /
-    ollama_backend.py / the empty deepseek_backend.py stub) — each takes
-    the per-document aligned records and returns the same JSON contract.
-    This is that seam in Spark terms: a remote/LLM batch backend would
-    receive exactly these per-doc Arrow batches and return the same
-    triple rows. tests/test_operators.py asserts byte-equal output with
-    the native-expression backend (`synthesize_triples`), which is what
-    makes the backends interchangeable under the P/R gate."""
-
-    def one_doc(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["line_no", "orig_idx"], kind="mergesort")
-        repo, path, commit = pdf.iloc[0][["repo", "path", "commit"]]
-        doc = f"{repo}/{path}"
-        defs_per_block: dict = {}
-        for _, m in pdf.iterrows():
-            if m.mention_type == "function_def" and m.block_id not in defs_per_block:
-                defs_per_block[m.block_id] = m.surface
-        pred_map = {
-            "import": "imports",
-            "import_symbol": "imports_symbol",
-            "function_def": "defines",
-        }
-        rows = []
-        for _, m in pdf.iterrows():
-            t = None
-            if m.mention_type in pred_map:
-                t = (doc, pred_map[m.mention_type], m.surface)
-            elif m.mention_type == "call" and m.block_id in defs_per_block:
-                t = (f"{doc}::{defs_per_block[m.block_id]}", "calls", m.surface)
-            if t is not None:
-                rows.append(
-                    {
-                        "repo": repo, "path": path, "commit": commit,
-                        "subj": t[0], "pred": t[1], "obj": t[2],
-                        "frame_id": f"{int(m.orig_idx):03d}",
-                        "line_no": int(m.line_no),
-                    }
-                )
-        return pd.DataFrame(
-            rows,
-            columns=["repo", "path", "commit", "subj", "pred", "obj",
-                     "frame_id", "line_no"],
-        )
-
-    return mentions.groupBy(*DOC_KEY).applyInPandas(one_doc, schema=TRIPLE_SCHEMA)
 
 
 def renumber_frames(triples: DataFrame) -> DataFrame:

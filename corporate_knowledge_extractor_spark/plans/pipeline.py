@@ -35,10 +35,8 @@ from pyspark.sql import functions as F
 from corporate_knowledge_extractor_spark.config import (
     DEFAULT_CONFIG,
     PRESETS,
-    PROFILES,
     EngineConfig,
     Preset,
-    Profile,
 )
 from corporate_knowledge_extractor_spark.corpus import generate_corpus
 from corporate_knowledge_extractor_spark.operators import canonicalize as cc
@@ -59,24 +57,13 @@ from corporate_knowledge_extractor_spark.operators.synthesize import synthesize_
 from corporate_knowledge_extractor_spark.sources.sinks import table_exists, read_table, write_table
 
 
-def _resolve_profile(profile: str | Profile | None) -> Profile | None:
-    if profile is None:
-        return None
-    return PROFILES[profile] if isinstance(profile, str) else profile
-
-
 def extract_triples(docs: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG,
-                    persist: bool = True,
-                    profile: str | Profile | None = None) -> DataFrame:
+                    persist: bool = True) -> DataFrame:
     """The extraction slice (docs -> triples) as one lazy chain.
 
-    ``profile`` selects a named (backend, anonymize) pair from
-    config.PROFILES — the reference's profiles.yaml surface: "sensitive"
-    routes synthesis through the batched backend seam with redaction on,
-    "fast" keeps native synthesis with redaction on (every reference
-    profile anonymizes), and the "trusted" extension compiles the
-    redaction pass out of the plan entirely (tests/test_presets.py
-    asserts all three behaviors).
+    ``cfg.redaction`` chooses the masks applied to mention surfaces; a
+    RedactionConfig with every mask off compiles the redaction pass out
+    of the plan (redact_expr is then the identity).
 
     For callers that don't checkpoint stage tables (entry smoke, bench,
     the kg_triples query) the mention fan-out point is persisted
@@ -101,11 +88,6 @@ def extract_triples(docs: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG,
     `aligned` stage); an unused array<string> column would ride through
     the persist and both downstream scans for free.
     """
-    prof = _resolve_profile(profile)
-    if prof is not None:
-        cfg = prof.engine_config(cfg)
-    synth = prof.synthesizer() if prof is not None else synthesize_triples
-
     # Exchange placement (guide §2.3 / §3.3 "explode after the shuffle"):
     # the block/cap windows force one hash(doc-key) exchange; with the
     # explode first, that exchange ships the 25M-row LINE table with the
@@ -136,7 +118,7 @@ def extract_triples(docs: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG,
     # known-surfaces subquery re-executes the whole dedup window chain
     # otherwise — measured 4x on the stage); same clearCache release
     # contract as the mentions persist above
-    return post_process(synth(mentions), persist=persist)
+    return post_process(synthesize_triples(mentions), persist=persist)
 
 
 @dataclass
@@ -156,12 +138,10 @@ class Pipeline:
         base_dir: str,
         cfg: EngineConfig = DEFAULT_CONFIG,
         run_id: str | None = None,
-        profile: str | Profile | None = None,
         preset: str | Preset | None = None,
     ):
         self.spark = spark
         self.base_dir = base_dir.rstrip("/")
-        self.profile = _resolve_profile(profile)
         self.preset = PRESETS[preset] if isinstance(preset, str) else preset
         if self.preset is not None:
             # a preset IS a config choice — a caller handing in a second,
@@ -175,11 +155,7 @@ class Pipeline:
                     "preset via dataclasses.replace(preset, config=...)"
                 )
             cfg = self.preset.config
-        # the profile's redaction choice applies wherever cfg.redaction is
-        # read (the mentions stage); its backend choice applies at the
-        # triples stage below — one named unit, like the reference's
-        # --profile flag selecting a profiles.yaml row at run time
-        self.cfg = self.profile.engine_config(cfg) if self.profile else cfg
+        self.cfg = cfg
         # audio_only.yaml analogue: frames disabled -> the run() plan
         # below genuinely omits the mention/alignment (and downstream KG)
         # stages and takes the reference's transcript-only early exit
@@ -284,8 +260,16 @@ class Pipeline:
             ]
         )
 
+        # checked before any stage writes, so a bad name leaves nothing on disk
+        if stop_after is not None and stop_after not in order:
+            raise ValueError(
+                f"Pipeline.run: stop_after={stop_after!r} is not a stage of "
+                f"this plan; expected one of {order}"
+            )
+        stop = order.index(stop_after) if stop_after is not None else len(order)
+
         def done(stage: str) -> bool:
-            return stop_after is not None and order.index(stage) >= order.index(stop_after)
+            return order.index(stage) >= stop
 
         docs_df = self._stage(
             "docs",
@@ -395,7 +379,6 @@ class Pipeline:
         if done("aligned"):
             return result
 
-        synth = self.profile.synthesizer() if self.profile else synthesize_triples
         # the dedup fan-out inside post_process is persisted for the
         # duration of this stage only — `scratch` hands the materialized
         # frame back so it can be released the moment the stage table is
@@ -404,7 +387,9 @@ class Pipeline:
         _scratch: list = []
         triples = self._stage(
             "triples",
-            lambda: post_process(synth(mentions), persist=True, scratch=_scratch),
+            lambda: post_process(
+                synthesize_triples(mentions), persist=True, scratch=_scratch
+            ),
             result,
             resume,
         )

@@ -33,6 +33,18 @@ def default_driver_memory() -> str:
     return f"{min(cap_mb, total_mb // 2)}m"
 
 
+def default_shuffle_partitions(master: str) -> int:
+    """Shuffle partitions when ``shuffle_partitions`` is omitted: N for
+    ``local[N]`` and ``local[N,F]`` (F = task retries), the host's core
+    count for every other master (``local[*]``, ``local-cluster[...]``,
+    cluster URLs)."""
+    if master.startswith("local[") and master.endswith("]"):
+        threads = master[len("local["):-1].split(",")[0]
+        if threads.isdigit():
+            return int(threads)
+    return os.cpu_count() or 8
+
+
 def get_spark(
     app_name: str = "corporate_knowledge_extractor_spark",
     master: str | None = None,
@@ -44,17 +56,15 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
     The driver heap is ``$SPARK_GRAFT_DRIVER_MEM`` if set, else
     ``default_driver_memory()``.
-    ``shuffle_partitions`` defaults to the local core count so small-scale
-    runs are not over-parallelized; on a real cluster pass
+    ``shuffle_partitions`` defaults to ``default_shuffle_partitions(master)``
+    so small-scale runs are not over-parallelized; on a real cluster pass
     ``executors * cores_per_executor * 2``.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
-        # local[N] -> N; local[*] -> cpu count
-        inner = master[master.find("[") + 1 : master.find("]")] if "[" in master else "*"
-        shuffle_partitions = os.cpu_count() or 8 if inner == "*" else int(inner)
+        shuffle_partitions = default_shuffle_partitions(master)
 
     builder = (
         SparkSession.builder.master(master)

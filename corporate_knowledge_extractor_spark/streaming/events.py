@@ -12,8 +12,9 @@ streaming-shaped and are provided here as true Structured Streaming jobs:
 
 Incremental ingest (the reference ROADMAP's "skip re-processing",
 ROADMAP.md:451-454) is the batch anti-join in plans/pipeline.py; its
-streaming twin is `Trigger.AvailableNow` over the same source, shown in
-`incremental_triples`.
+streaming twin is `incremental_triples_stream`: dedup, the same
+anti-join and batch extraction per micro-batch under
+`Trigger.AvailableNow`.
 
 Tests drive these with the memory sink + processAllAvailable (no live
 source needed).
@@ -135,17 +136,6 @@ def dedup_stream(
             list(key_cols)
         )
     return df.dropDuplicates(list(key_cols))
-
-
-def incremental_triples(spark, docs_path: str, done_keys: DataFrame):
-    """Trigger.AvailableNow-style incremental processing sketch: stream the
-    docs source, anti-join already-done (repo, path, commit) keys, extract
-    triples for the remainder. Returns the streaming DataFrame (caller
-    attaches a sink + AvailableNow trigger)."""
-    from corporate_knowledge_extractor_spark.corpus import CORPUS_SCHEMA
-
-    stream = spark.readStream.schema(CORPUS_SCHEMA).parquet(docs_path)
-    return stream.join(done_keys, ["repo", "path", "commit"], "left_anti")
 
 
 def incremental_triples_stream(

@@ -32,10 +32,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> None:
     # flag surface mirrors the reference CLI (scripts/run.py:105-165):
     # --preset (incl. the frames-disabled one), manual knob overrides on
-    # top of the preset, a single-file override, plus the profiles.yaml
-    # --profile axis and the stage-checkpoint controls the reference
-    # lacks but the north_rule requires
-    from corporate_knowledge_extractor_spark.config import PRESETS, PROFILES
+    # top of the preset, a single-file override, plus the stage-checkpoint
+    # controls the reference lacks but the north_rule requires
+    from corporate_knowledge_extractor_spark.config import PRESETS
 
     ap = argparse.ArgumentParser()
     ap.add_argument("--base-dir", required=True, help="stage-table root (posix path in sandbox; object store on a cluster)")
@@ -43,8 +42,6 @@ def main() -> None:
     ap.add_argument("--docs-table", default=None, help="existing (repo,path,commit,lang,content) parquet/Iceberg path")
     ap.add_argument("--preset", choices=sorted(PRESETS), default=None,
                     help="named parameter set (reference --preset; prose_only = audio_only analogue)")
-    ap.add_argument("--profile", choices=sorted(PROFILES), default=None,
-                    help="backend x redaction profile (reference profiles.yaml)")
     ap.add_argument("--sample-every-n-lines", type=int, default=None,
                     help="manual sampler override on top of the preset (reference --sample-rate)")
     ap.add_argument("--max-per-block", type=int, default=None,
@@ -97,9 +94,7 @@ def main() -> None:
         cfg = replace(cfg, mentions=replace(cfg.mentions, **mention_overrides))
         preset = replace(preset, config=cfg) if preset else None
 
-    pipe = Pipeline(
-        spark, args.base_dir, cfg=cfg, profile=args.profile, preset=preset
-    )
+    pipe = Pipeline(spark, args.base_dir, cfg=cfg, preset=preset)
     result = pipe.run(
         docs=docs, sf=args.sf, resume=not args.no_resume,
         stop_after=args.stop_after,

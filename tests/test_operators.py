@@ -193,39 +193,6 @@ def test_categorize_argmax_and_default(spark):
     assert got["parse_graph"] == "compute"
 
 
-def test_synthesize_backends_agree(spark):
-    """The applyInPandas batch backend (the LLM-backend seam shape) must
-    emit byte-identical triples to the native-expression backend on a
-    real corpus slice — interchangeability is what the strategy seam
-    promises (reference: src/synthesize/base.py + *_backend.py)."""
-    from corporate_knowledge_extractor_spark.corpus import generate_corpus
-    from corporate_knowledge_extractor_spark.operators.mentions import (
-        mention_stage,
-        junk_block_filter as jbf,
-    )
-    from corporate_knowledge_extractor_spark.operators.synthesize import (
-        synthesize_triples,
-        synthesize_triples_batched,
-    )
-
-    from corporate_knowledge_extractor_spark.materialize import materialize, release
-
-    docs = generate_corpus(spark, n_docs=120)
-    # materialize(), NOT localCheckpoint: checkpoint RDDs survive
-    # clearCache and leaked into later tests' storage assertions (the
-    # exact failure mode the materialization policy bans in production
-    # code — test fixtures follow the same rule)
-    mentions = materialize(mention_stage(jbf(assign_blocks(split_lines(docs)))))
-    cols = ["repo", "path", "commit", "subj", "pred", "obj", "frame_id", "line_no"]
-    native = {tuple(r) for r in synthesize_triples(mentions).select(*cols).collect()}
-    batched = {
-        tuple(r) for r in synthesize_triples_batched(mentions).select(*cols).collect()
-    }
-    release(mentions)
-    assert native == batched
-    assert len(native) > 500
-
-
 def test_post_process_persist_fanout_contract(spark):
     """post_process(persist=True) must (a) emit exactly the same rows as
     the unpersisted form, (b) hand the materialized dedup frame back via

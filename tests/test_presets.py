@@ -94,49 +94,38 @@ def test_prose_only_preset_omits_mention_stages(spark, corpus, tmp_path):
     assert os.path.exists(f"{base}/report/metadata.json")
 
 
-def test_profiles_redaction_and_backend(spark, corpus, tmp_path):
-    """Profiles (config/profiles.yaml analogue): the sensitive profile
-    must actually redact the mention surfaces AND route synthesis through
-    the batched backend; `fast` mirrors the reference contract (every
-    profiles.yaml row keeps anonymize: true) so it must ALSO redact; the
-    `trusted` extension profile is the only one that compiles the
-    redaction pass out (raw PII survives). Checked on the staged
-    Pipeline's mentions table, where the maintainer-comment person
-    mentions carry the emails."""
+def test_redaction_config_masks_on_and_off(spark, corpus, tmp_path):
+    """EngineConfig.redaction is the one redaction switch: the default
+    config masks the mention surfaces, and a RedactionConfig with every
+    mask off compiles the pass out so raw PII survives. Checked on the
+    staged Pipeline's mentions table, where the maintainer-comment
+    person mentions carry the emails."""
     from pyspark.sql import functions as F
 
+    from corporate_knowledge_extractor_spark.config import (
+        DEFAULT_CONFIG,
+        EngineConfig,
+        RedactionConfig,
+    )
     from corporate_knowledge_extractor_spark.plans.pipeline import Pipeline
 
     docs, _, _ = corpus
+    masks_off = EngineConfig(
+        redaction=RedactionConfig(
+            mask_names=False, mask_emails=False, mask_phones=False
+        )
+    )
 
-    def mentions_with(profile, sub):
-        p = Pipeline(spark, str(tmp_path / profile), profile=profile)
+    def mentions_with(name, cfg, sub):
+        p = Pipeline(spark, str(tmp_path / name), cfg=cfg)
         r = p.run(docs=docs, stop_after="mentions")
         m = r.tables["mentions"]
         return m.where(F.col("surface").contains(sub)).count()
 
-    assert mentions_with("sensitive", "@example.com") == 0
-    assert mentions_with("sensitive", "[EMAIL]") > 0
-    assert mentions_with("fast", "@example.com") == 0
-    assert mentions_with("fast", "[EMAIL]") > 0
-    assert mentions_with("trusted", "@example.com") > 0
-    assert mentions_with("trusted", "[EMAIL]") == 0
-
-
-def test_profile_backends_agree_on_triples(spark, corpus):
-    """The sensitive profile's batched backend must emit the exact same
-    triple set as the default native path — the interchangeability
-    contract that keeps every profile under the same P/R gate."""
-    docs, _, _ = corpus
-    native = {
-        tuple(r)
-        for r in extract_triples(docs, persist=False).collect()
-    }
-    batched = {
-        tuple(r)
-        for r in extract_triples(docs, persist=False, profile="sensitive").collect()
-    }
-    assert native == batched
+    assert mentions_with("default", DEFAULT_CONFIG, "@example.com") == 0
+    assert mentions_with("default", DEFAULT_CONFIG, "[EMAIL]") > 0
+    assert mentions_with("masks_off", masks_off, "@example.com") > 0
+    assert mentions_with("masks_off", masks_off, "[EMAIL]") == 0
 
 
 def test_sampler_is_noop_at_one(spark, corpus):

@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from corporate_knowledge_extractor_spark.plans.pipeline import Pipeline
 
 
@@ -64,3 +66,17 @@ def test_incremental_docs_anti_join(spark, tmp_path):
     bigger = docs.unionByName(extra.select(*docs.columns))
     remaining = pipe.incremental_docs(bigger)
     assert remaining.count() == 20
+
+
+def test_unknown_stop_after_fails_before_any_stage_is_written(spark, tmp_path):
+    """A stop_after name the plan does not have (a typo, or a frames-path
+    stage under the frames-disabled preset) is refused before the docs
+    stage is checkpointed."""
+    for name, kwargs, stop_after in (
+        ("typo", {}, "mention"),
+        ("prose", {"preset": "prose_only"}, "mentions"),
+    ):
+        base = str(tmp_path / name)
+        with pytest.raises(ValueError):
+            Pipeline(spark, base, **kwargs).run(sf=0.001, stop_after=stop_after)
+        assert not os.path.exists(f"{base}/tables"), name

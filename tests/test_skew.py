@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 
 from corporate_knowledge_extractor_spark.operators.skew import (
     add_salt,
-    key_skew_report,
     salted_join,
 )
 
@@ -74,13 +73,3 @@ def test_cc_salted_rounds_on_zipf_graph(spark):
     # every undirected edge in both directions (no duplicates, no loops)
     assert stats[0]["edges"] == 2 * len(edges)
     assert stats[0]["max_join_key_rows"] <= 2 * hub_deg / cfg.salt_buckets
-
-
-def test_skew_report_flags_hot_key(spark):
-    fact = spark.createDataFrame(
-        [("hot", i) for i in range(90)] + [("cold", i) for i in range(10)],
-        "key string, payload int",
-    )
-    top = key_skew_report(fact, ["key"], top=1).collect()
-    assert top[0].key == "hot"
-    assert abs(top[0].share - 0.9) < 1e-6
