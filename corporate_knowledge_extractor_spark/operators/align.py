@@ -13,7 +13,8 @@ Reference semantics (/root/reference/src/align/aligner.py:4-110), exactly:
      ``w_tags*tag_sim + w_text*text_sim + w_ts/(1+|dt|/divisor)``
      (aligner.py:58-73): tag_sim = fraction of tags sharing >=1 word with
      the speech (aligner.py:84-95); text_sim = |overlap| / |speech words|
-     over stopword-filtered words of length > 2 (aligner.py:98-110);
+     over words of length > 2 (aligner.py:98-110; its stop-word list is
+     not applied);
   4. argmax wins, first candidate on ties (Python max keeps the first
      maximal element, aligner.py:80);
   5. no candidates -> fall back to the closest frame's text
@@ -66,14 +67,11 @@ from corporate_knowledge_extractor_spark.config import AlignmentConfig
 DOC = ["repo", "path", "commit"]
 
 
-def _content_words(col: F.Column, stop_words: tuple[str, ...]) -> F.Column:
-    """Stopword-filtered words of length > 2 (aligner.py:103-104)."""
-    stops = F.array(*[F.lit(s) for s in stop_words]) if stop_words else F.array()
+def _content_words(col: F.Column) -> F.Column:
+    """Distinct lowercase words of length > 2 (aligner.py:103-104's
+    length filter; no stop-word list is applied)."""
     return F.array_distinct(
-        F.filter(
-            F.split(F.lower(col), r"\s+"),
-            lambda w: (F.length(w) > 2) & ~F.array_contains(stops, w),
-        )
+        F.filter(F.split(F.lower(col), r"\s+"), lambda w: F.length(w) > 2)
     )
 
 
@@ -81,7 +79,6 @@ def align_segments_to_frames(
     segments: DataFrame,  # DOC + (seg_id, start, end, text)
     frames: DataFrame,  # DOC + (ts, text, tags array<string>)
     cfg: AlignmentConfig = AlignmentConfig(),
-    stop_words: tuple[str, ...] = (),
     persist: bool = False,
     scratch: list | None = None,
 ) -> DataFrame:
@@ -109,7 +106,7 @@ def align_segments_to_frames(
     f = f.withColumn("f_idx", F.row_number().over(w_doc) - 1)
     # per-frame word prep, computed once and carried through the candidate
     # join (not re-split per candidate pair)
-    f = f.withColumn("f_words", _content_words(F.col("f_text"), stop_words)).withColumn(
+    f = f.withColumn("f_words", _content_words(F.col("f_text"))).withColumn(
         "f_tag_words",
         F.transform(
             F.coalesce(F.col("f_tags"), F.array()),
@@ -140,7 +137,7 @@ def align_segments_to_frames(
             "speech_words_all",
             F.array_distinct(F.split(F.lower(F.col("speech")), r"\s+")),
         )
-        .withColumn("s_words", _content_words(F.col("speech"), stop_words))
+        .withColumn("s_words", _content_words(F.col("speech")))
         .drop("speech")
     )
 

@@ -2,10 +2,15 @@
 
 Stage layout mirrors the reference's process_file() lifecycle
 (/root/reference/scripts/run.py:106-199; trace in SURVEY.md §3.1), but as
-a checkpointed DAG of table writes instead of an in-memory list relay:
+a checkpointed DAG of table writes instead of an in-memory list relay.
+``Pipeline._plan`` declares it once, as an ordered (name, build) list,
+and one loop in ``Pipeline.run`` executes it:
 
-  docs -> blocks -> mentions -> triples -> (entities, links) ->
-  components -> nodes + edges     (+ lineage and metrics tables)
+  docs -> blocks -> mentions -> aligned -> triples -> entities ->
+  links -> components -> nodes -> edges   (+ lineage and metrics tables)
+
+or, with ``EngineConfig.frames_enabled`` off (the reference's audio-only
+early exit), docs -> blocks -> transcript plus a transcript-only report.
 
 north_rule contracts implemented here:
   * resumable from per-stage checkpoints — each stage writes parquet with
@@ -25,8 +30,10 @@ gates on availability — sources/sinks.py).
 
 from __future__ import annotations
 
+import shutil
 import time
 import uuid
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -34,13 +41,14 @@ from pyspark.sql import functions as F
 
 from corporate_knowledge_extractor_spark.config import (
     DEFAULT_CONFIG,
-    PRESETS,
+    AlignmentConfig,
     EngineConfig,
-    Preset,
 )
 from corporate_knowledge_extractor_spark.corpus import generate_corpus
+from corporate_knowledge_extractor_spark.materialize import materialize, release
 from corporate_knowledge_extractor_spark.operators import canonicalize as cc
 from corporate_knowledge_extractor_spark.operators import linking
+from corporate_knowledge_extractor_spark.operators.align import align_segments_to_frames
 from corporate_knowledge_extractor_spark.operators.mentions import (
     junk_block_filter,
     mention_stage,
@@ -51,10 +59,30 @@ from corporate_knowledge_extractor_spark.operators.redact import redact_columns
 from corporate_knowledge_extractor_spark.operators.segment import (
     DOC_KEY,
     assign_blocks,
+    block_segments,
     split_lines,
 )
 from corporate_knowledge_extractor_spark.operators.synthesize import synthesize_triples
+from corporate_knowledge_extractor_spark.sources.report import write_transcript_report
 from corporate_knowledge_extractor_spark.sources.sinks import table_exists, read_table, write_table
+
+
+def blocked_lines(docs: DataFrame) -> DataFrame:
+    """docs -> one row per line with its block id, junk blocks dropped:
+    the shared head of ``extract_triples`` and the staged blocks stage.
+
+    Exchange placement (guide §2.3 / §3.3 "explode after the shuffle"):
+    the block/cap windows force one hash(doc-key) exchange; with the
+    explode first, that exchange ships the 25M-row LINE table with the
+    doc-key strings duplicated per line (541 MB at sf1.0). Clustering
+    the 500k-row doc table BEFORE split_lines moves the same exchange
+    below the explode — one content blob per doc crosses instead (50x
+    fewer rows, no per-line key duplication), and Generate preserves
+    the partitioning so every downstream window/join still reuses it.
+    Measured result-identical, ~5% less CPU at sf1.0 locally
+    (OPTIMIZATION_r06.md "Second pass" item 2); the row-count win is
+    the point at network-shuffle scale."""
+    return junk_block_filter(assign_blocks(split_lines(docs.repartition(*DOC_KEY))))
 
 
 def extract_triples(docs: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG,
@@ -88,31 +116,15 @@ def extract_triples(docs: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG,
     `aligned` stage); an unused array<string> column would ride through
     the persist and both downstream scans for free.
     """
-    # Exchange placement (guide §2.3 / §3.3 "explode after the shuffle"):
-    # the block/cap windows force one hash(doc-key) exchange; with the
-    # explode first, that exchange ships the 25M-row LINE table with the
-    # doc-key strings duplicated per line (541 MB at sf1.0). Clustering
-    # the 500k-row doc table BEFORE split_lines moves the same exchange
-    # below the explode — one content blob per doc crosses instead (50x
-    # fewer rows, no per-line key duplication), and Generate preserves
-    # the partitioning so every downstream window/join still reuses it.
-    # Measured result-identical, ~5% less CPU at sf1.0 locally
-    # (OPTIMIZATION_r06.md "Second pass" item 2); the row-count win is
-    # the point at network-shuffle scale.
-    blocked = junk_block_filter(
-        assign_blocks(split_lines(docs.repartition(*DOC_KEY)))
-    )
     # blocked is consumed exactly once now that detect_mentions is a fused
     # single-scan rule bank — no checkpoint needed; the whole
     # docs->mentions chain is one job
     mentions = redact_columns(
-        mention_stage(blocked, cfg.mentions),
+        mention_stage(blocked_lines(docs), cfg.mentions),
         ["surface"],
         cfg.redaction,
     )
     if persist:
-        from corporate_knowledge_extractor_spark.materialize import materialize
-
         mentions = materialize(mentions)
     # persist also gates the dedup fan-out inside post_process (the
     # known-surfaces subquery re-executes the whole dedup window chain
@@ -121,12 +133,86 @@ def extract_triples(docs: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG,
     return post_process(synthesize_triples(mentions), persist=persist)
 
 
+def build_aligned(blocks: DataFrame, mentions: DataFrame, cfg: AlignmentConfig,
+                  scratch: list) -> DataFrame:
+    """Stage [5] analogue (scripts/run.py:83, src/align/aligner.py:4-20):
+    align each block segment ("speech") to its best-scoring mention
+    ("frame") — J1 scored interval join. Context table only; the triple
+    path consumes mentions directly. The indexed-frame persist inside
+    align lands in ``scratch``."""
+    segs = block_segments(blocks).select(
+        "repo", "path", "commit",
+        F.col("block_id").alias("seg_id"),
+        F.col("start").cast("double").alias("start"),
+        F.col("end").cast("double").alias("end"),
+        "text",
+    )
+    frames = mentions.select(
+        "repo", "path", "commit",
+        F.col("line_no").cast("double").alias("ts"),
+        F.col("surface").alias("text"),
+        "tags",
+    )
+    return align_segments_to_frames(segs, frames, cfg, persist=True, scratch=scratch)
+
+
+def build_edges(triples: DataFrame, entities: DataFrame, components: DataFrame) -> DataFrame:
+    """Triples -> weighted graph edges, linked objects resolved to their
+    canonical entity."""
+    cmap = cc.canonical_map(entities, components)
+    linked_preds = ("defines", "calls", "imports_symbol")
+    # no forced broadcast: the canonical map scales with distinct
+    # entities; AQE broadcasts it only while it actually fits
+    t_linked = triples.where(F.col("pred").isin(*linked_preds)).join(
+        cmap, triples.obj == cmap.surface, "left"
+    )
+    t_other = triples.where(~F.col("pred").isin(*linked_preds))
+    edges_linked = t_linked.select(
+        F.xxhash64("subj").alias("src"),
+        F.coalesce("canonical_id", F.xxhash64("obj")).alias("dst"),
+        "pred",
+        F.col("subj").alias("src_name"),
+        F.coalesce("canonical", F.col("obj")).alias("dst_name"),
+        "frame_id",
+        "category",
+        "repo", "path", "commit",
+    )
+    edges_other = t_other.select(
+        F.xxhash64("subj").alias("src"),
+        F.xxhash64("obj").alias("dst"),
+        "pred",
+        F.col("subj").alias("src_name"),
+        F.col("obj").alias("dst_name"),
+        "frame_id",
+        "category",
+        "repo", "path", "commit",
+    )
+    return (
+        edges_linked.unionByName(edges_other)
+        .groupBy("src", "dst", "pred", "src_name", "dst_name", "category")
+        .agg(
+            F.count(F.lit(1)).alias("weight"),
+            F.min("frame_id").alias("frame_id"),
+            F.min(F.concat_ws("/", "repo", "path")).alias("example_doc"),
+        )
+        # destination-id range bucket = the stage table's partition
+        # key (STAGE_PARTITIONING): "edges into canonical X" reads
+        # prune to one of GRAPH_BUCKETS dirs
+        .withColumn("_dst_bucket", cc.cid_bucket(F.col("dst")))
+    )
+
+
 @dataclass
 class PipelineResult:
     run_id: str
     tables: dict[str, DataFrame] = field(default_factory=dict)
     stage_seconds: dict[str, float] = field(default_factory=dict)
     reused_stages: list[str] = field(default_factory=list)
+
+
+# a stage builder: (tables of the earlier stages, the stage's scratch
+# list) -> the stage's DataFrame
+Build = Callable[[dict[str, DataFrame], list], DataFrame]
 
 
 class Pipeline:
@@ -138,30 +224,10 @@ class Pipeline:
         base_dir: str,
         cfg: EngineConfig = DEFAULT_CONFIG,
         run_id: str | None = None,
-        preset: str | Preset | None = None,
     ):
         self.spark = spark
         self.base_dir = base_dir.rstrip("/")
-        self.preset = PRESETS[preset] if isinstance(preset, str) else preset
-        if self.preset is not None:
-            # a preset IS a config choice — a caller handing in a second,
-            # disagreeing cfg would previously have it silently discarded
-            # in favor of preset.config (ADVICE r04). Equal values are
-            # fine (submit_pipeline folds manual overrides into both).
-            if cfg is not DEFAULT_CONFIG and cfg != self.preset.config:
-                raise ValueError(
-                    "Pipeline: cfg and preset were both supplied and "
-                    "disagree; pass one, or fold overrides into the "
-                    "preset via dataclasses.replace(preset, config=...)"
-                )
-            cfg = self.preset.config
         self.cfg = cfg
-        # audio_only.yaml analogue: frames disabled -> the run() plan
-        # below genuinely omits the mention/alignment (and downstream KG)
-        # stages and takes the reference's transcript-only early exit
-        self.frames_enabled = (
-            self.preset.frames_enabled if self.preset is not None else True
-        )
         self.run_id = run_id or uuid.uuid4().hex[:12]
 
     # -- bookkeeping ------------------------------------------------------
@@ -184,12 +250,13 @@ class Pipeline:
         rows.unpersist()
         return int(total)
 
-    def record_metric(self, stage: str, metric: str, value: float) -> None:
-        row = self.spark.createDataFrame(
-            [(self.run_id, stage, metric, float(value))],
+    def record_metrics(self, stage: str, metrics: dict[str, float]) -> None:
+        """Appends one metrics row per entry, all in one write (one job)."""
+        rows = self.spark.createDataFrame(
+            [(self.run_id, stage, name, float(v)) for name, v in metrics.items()],
             "run_id string, stage string, metric string, value double",
         )
-        write_table(row, f"{self.base_dir}/metrics", mode="append")
+        write_table(rows, f"{self.base_dir}/metrics", mode="append")
 
     # stage-table partition columns: docs partitioned by lang so downstream
     # lang-pruned scans (vendored/generated-code exclusion at 100 TB) hit
@@ -204,30 +271,41 @@ class Pipeline:
         "edges": ["_dst_bucket"],
     }
 
-    def _stage(self, name: str, build, result: PipelineResult, resume: bool) -> DataFrame:
+    def _stage(self, name: str, build: Build, result: PipelineResult, resume: bool) -> None:
         path = f"{self.base_dir}/tables/{name}"
         if resume and table_exists(self.spark, path):
             result.reused_stages.append(name)
-            df = read_table(self.spark, path)
-            result.tables[name] = df
-            return df
+            result.tables[name] = read_table(self.spark, path)
+            return
         t0 = time.time()
-        df = build()
-        write_table(df, path, mode="overwrite", partition_by=self.STAGE_PARTITIONING.get(name))
-        wall_ms = (time.time() - t0) * 1000
+        # what the builder persists or spills to disk for this stage only;
+        # released the moment the stage table is written (precise release,
+        # not a session-wide clearCache that would drop caches the caller
+        # owns): frames are unpersisted, directories removed
+        scratch: list = []
+        try:
+            write_table(
+                build(result.tables, scratch), path, mode="overwrite",
+                partition_by=self.STAGE_PARTITIONING.get(name),
+            )
+            wall_ms = (time.time() - t0) * 1000
+        finally:
+            release(*(x for x in scratch if isinstance(x, DataFrame)))
+            for x in scratch:
+                if isinstance(x, str):
+                    shutil.rmtree(x, ignore_errors=True)
         out = read_table(self.spark, path)  # read back: downstream plans scan parquet
         result.stage_seconds[name] = wall_ms / 1000
         total_rows = self._record_lineage(name, out, wall_ms)
-        self.record_metric(name, "wall_ms", wall_ms)
         # per-stage throughput: the scaling-history row (round-3 verdict
         # task 8) — runs at different parallelism/scale become comparable
         # straight from the metrics table, no re-instrumentation
-        self.record_metric(name, "output_rows", float(total_rows))
-        self.record_metric(
-            name, "rows_per_sec", total_rows / max(wall_ms / 1000, 1e-9)
-        )
+        self.record_metrics(name, {
+            "wall_ms": wall_ms,
+            "output_rows": total_rows,
+            "rows_per_sec": total_rows / max(wall_ms / 1000, 1e-9),
+        })
         result.tables[name] = out
-        return out
 
     def incremental_docs(self, docs: DataFrame) -> DataFrame:
         """Doc-level incremental ingest (the reference ROADMAP's
@@ -243,6 +321,67 @@ class Pipeline:
 
     # -- the pipeline -----------------------------------------------------
 
+    def _components(self, t: dict[str, DataFrame], scratch: list) -> DataFrame:
+        # scratch inside the run dir: CC's lineage-cut tables are scrubbed
+        # to labels_final at convergence; the returned labels (a persisted
+        # scan of labels_final) and the dir itself go with the stage scratch
+        scratch_dir = f"{self.base_dir}/tmp/cc_scratch"
+        labels = cc.connected_components(
+            t["entities"],
+            t["links"],
+            self.cfg.canonicalize,
+            scratch_dir=scratch_dir,
+            on_iteration=lambda i, changed: self.record_metrics(
+                "components", {f"cc_changed_iter_{i}": changed}
+            ),
+            # shuffle-balance evidence (north_rule: skew handled
+            # explicitly): worst per-join-key reducer load after the
+            # hot/cold salt split, plus how many keys went hot
+            on_skew_stats=lambda s: self.record_metrics(
+                "components", {f"cc_{k}": v for k, v in s.items()}
+            ),
+        )
+        scratch += [labels, scratch_dir]
+        return labels
+
+    def _plan(self, docs: DataFrame | None, sf: float) -> list[tuple[str, Build]]:
+        cfg = self.cfg
+        plan: list[tuple[str, Build]] = [
+            ("docs", lambda t, s: docs if docs is not None else generate_corpus(self.spark, sf=sf)),
+            ("blocks", lambda t, s: blocked_lines(t["docs"])),
+        ]
+        if not cfg.frames_enabled:
+            # the reference's audio-only early exit (scripts/run.py:52-74):
+            # no frames -> skip OCR/tagging/alignment entirely; anonymize
+            # the transcript (audio_only.yaml notes: "Anonymization still
+            # applied to transcripts"); run() then builds the report from
+            # segments
+            return plan + [
+                ("transcript", lambda t, s: redact_columns(
+                    block_segments(t["blocks"]), ["text"], cfg.redaction)),
+            ]
+        return plan + [
+            ("mentions", lambda t, s: redact_columns(
+                tag_mentions(mention_stage(t["blocks"], cfg.mentions)),
+                ["surface"],
+                cfg.redaction,
+            )),
+            ("aligned", lambda t, s: build_aligned(t["blocks"], t["mentions"], cfg.alignment, s)),
+            # the dedup fan-out inside post_process is persisted for the
+            # duration of this stage only
+            ("triples", lambda t, s: post_process(
+                synthesize_triples(t["mentions"]), persist=True, scratch=s)),
+            ("entities", lambda t, s: linking.extract_entities(t["triples"])),
+            ("links", lambda t, s: linking.score_pairs(
+                linking.entity_candidate_pairs(t["entities"], cfg.linking),
+                t["entities"],
+                cfg.linking,
+            )),
+            ("components", self._components),
+            ("nodes", lambda t, s: cc.build_nodes(t["entities"], t["components"])),
+            ("edges", lambda t, s: build_edges(t["triples"], t["entities"], t["components"])),
+        ]
+
     def run(
         self,
         docs: DataFrame | None = None,
@@ -251,253 +390,23 @@ class Pipeline:
         stop_after: str | None = None,
     ) -> PipelineResult:
         result = PipelineResult(run_id=self.run_id)
-        order = (
-            ["docs", "blocks", "transcript"]
-            if not self.frames_enabled
-            else [
-                "docs", "blocks", "mentions", "aligned", "triples",
-                "entities", "links", "components", "nodes", "edges",
-            ]
-        )
-
+        plan = self._plan(docs, sf)
+        names = [name for name, _ in plan]
         # checked before any stage writes, so a bad name leaves nothing on disk
-        if stop_after is not None and stop_after not in order:
+        if stop_after is not None and stop_after not in names:
             raise ValueError(
                 f"Pipeline.run: stop_after={stop_after!r} is not a stage of "
-                f"this plan; expected one of {order}"
+                f"this plan; expected one of {names}"
             )
-        stop = order.index(stop_after) if stop_after is not None else len(order)
-
-        def done(stage: str) -> bool:
-            return order.index(stage) >= stop
-
-        docs_df = self._stage(
-            "docs",
-            lambda: (docs if docs is not None else generate_corpus(self.spark, sf=sf)),
-            result,
-            resume,
-        )
-        if done("docs"):
-            return result
-
-        blocks = self._stage(
-            "blocks",
-            # same exchange placement as extract_triples: cluster the doc
-            # table by key before the explode so the windows' mandatory
-            # exchange ships blobs, not lines
-            lambda: junk_block_filter(
-                assign_blocks(split_lines(docs_df.repartition(*DOC_KEY)))
-            ),
-            result,
-            resume,
-        )
-        if done("blocks"):
-            return result
-
-        if not self.frames_enabled:
-            # the reference's audio-only early exit (scripts/run.py:52-74):
-            # no frames -> skip OCR/tagging/alignment entirely; anonymize
-            # the transcript (audio_only.yaml notes: "Anonymization still
-            # applied to transcripts") and build the report from segments
-            from corporate_knowledge_extractor_spark.operators.segment import (
-                block_segments,
-            )
-            from corporate_knowledge_extractor_spark.sources.report import (
-                write_transcript_report,
-            )
-
-            transcript = self._stage(
-                "transcript",
-                lambda: redact_columns(
-                    block_segments(blocks), ["text"], self.cfg.redaction
-                ),
-                result,
-                resume,
-            )
-            if done("transcript"):
+        for name, build in plan:
+            self._stage(name, build, result, resume)
+            if name == stop_after:
                 return result
+        if not self.cfg.frames_enabled:
             meta = write_transcript_report(
-                f"{self.base_dir}/report", transcript
+                f"{self.base_dir}/report", result.tables["transcript"]
             )
-            self.record_metric("transcript", "segments", meta["segments_count"])
-            return result
-
-        mentions = self._stage(
-            "mentions",
-            lambda: redact_columns(
-                tag_mentions(mention_stage(blocks, self.cfg.mentions)),
-                ["surface"],
-                self.cfg.redaction,
-            ),
-            result,
-            resume,
-        )
-        if done("mentions"):
-            return result
-
-        # stage [5] analogue (scripts/run.py:83, src/align/aligner.py:4-20):
-        # align each block segment ("speech") to its best-scoring mention
-        # ("frame") — J1 scored interval join. Context table only; the
-        # triple path consumes mentions directly.
-        # the indexed-frame persist inside align is released the moment
-        # the stage table is written (same precise-release contract as
-        # the triples stage's dedup fan-out below)
-        _align_scratch: list = []
-
-        def build_aligned() -> DataFrame:
-            from corporate_knowledge_extractor_spark.operators.align import (
-                align_segments_to_frames,
-            )
-            from corporate_knowledge_extractor_spark.operators.segment import (
-                block_segments,
-            )
-
-            segs = block_segments(blocks).select(
-                "repo", "path", "commit",
-                F.col("block_id").alias("seg_id"),
-                F.col("start").cast("double").alias("start"),
-                F.col("end").cast("double").alias("end"),
-                "text",
-            )
-            frames = mentions.select(
-                "repo", "path", "commit",
-                F.col("line_no").cast("double").alias("ts"),
-                F.col("surface").alias("text"),
-                "tags",
-            )
-            return align_segments_to_frames(
-                segs, frames, self.cfg.alignment,
-                persist=True, scratch=_align_scratch,
-            )
-
-        self._stage("aligned", build_aligned, result, resume)
-        from corporate_knowledge_extractor_spark.materialize import (
-            release as _release,
-        )
-
-        _release(*_align_scratch)
-        if done("aligned"):
-            return result
-
-        # the dedup fan-out inside post_process is persisted for the
-        # duration of this stage only — `scratch` hands the materialized
-        # frame back so it can be released the moment the stage table is
-        # written (precise release, not a session-wide clearCache that
-        # would drop caches the caller owns)
-        _scratch: list = []
-        triples = self._stage(
-            "triples",
-            lambda: post_process(
-                synthesize_triples(mentions), persist=True, scratch=_scratch
-            ),
-            result,
-            resume,
-        )
-        from corporate_knowledge_extractor_spark.materialize import release
-
-        release(*_scratch)
-        if done("triples"):
-            return result
-
-        entities = self._stage(
-            "entities", lambda: linking.extract_entities(triples), result, resume
-        )
-        if done("entities"):
-            return result
-
-        links = self._stage(
-            "links",
-            lambda: linking.score_pairs(
-                linking.entity_candidate_pairs(entities, self.cfg.linking),
-                entities,
-                self.cfg.linking,
-            ),
-            result,
-            resume,
-        )
-        if done("links"):
-            return result
-
-        components = self._stage(
-            "components",
-            lambda: cc.connected_components(
-                entities,
-                links,
-                self.cfg.canonicalize,
-                # scratch inside the run dir: CC's lineage-cut tables are
-                # scrubbed to labels_final at convergence and the rest
-                # lives/dies with the pipeline's own base_dir instead of
-                # accumulating in the system tempdir
-                scratch_dir=f"{self.base_dir}/tmp/cc_scratch",
-                on_iteration=lambda i, changed: self.record_metric(
-                    "components", f"cc_changed_iter_{i}", changed
-                ),
-                # shuffle-balance evidence (north_rule: skew handled
-                # explicitly): worst per-join-key reducer load after the
-                # hot/cold salt split, plus how many keys went hot
-                on_skew_stats=lambda s: [
-                    self.record_metric("components", f"cc_{k}", v)
-                    for k, v in s.items()
-                ],
-            ),
-            result,
-            resume,
-        )
-        if done("components"):
-            return result
-
-        nodes = self._stage(
-            "nodes", lambda: cc.build_nodes(entities, components), result, resume
-        )
-        if done("nodes"):
-            return result
-
-        def build_edges() -> DataFrame:
-            cmap = cc.canonical_map(entities, components)
-            linked_preds = ("defines", "calls", "imports_symbol")
-            # no forced broadcast: the canonical map scales with distinct
-            # entities; AQE broadcasts it only while it actually fits
-            t_linked = triples.where(F.col("pred").isin(*linked_preds)).join(
-                cmap, triples.obj == cmap.surface, "left"
-            )
-            t_other = triples.where(~F.col("pred").isin(*linked_preds))
-            edges_linked = t_linked.select(
-                F.xxhash64("subj").alias("src"),
-                F.coalesce("canonical_id", F.xxhash64("obj")).alias("dst"),
-                "pred",
-                F.col("subj").alias("src_name"),
-                F.coalesce("canonical", F.col("obj")).alias("dst_name"),
-                "frame_id",
-                "category",
-                "repo", "path", "commit",
-            )
-            edges_other = t_other.select(
-                F.xxhash64("subj").alias("src"),
-                F.xxhash64("obj").alias("dst"),
-                "pred",
-                F.col("subj").alias("src_name"),
-                F.col("obj").alias("dst_name"),
-                "frame_id",
-                "category",
-                "repo", "path", "commit",
-            )
-            return (
-                edges_linked.unionByName(edges_other)
-                .groupBy("src", "dst", "pred", "src_name", "dst_name", "category")
-                .agg(
-                    F.count(F.lit(1)).alias("weight"),
-                    F.min("frame_id").alias("frame_id"),
-                    F.min(F.concat_ws("/", "repo", "path")).alias("example_doc"),
-                )
-                # destination-id range bucket = the stage table's partition
-                # key (STAGE_PARTITIONING): "edges into canonical X" reads
-                # prune to one of GRAPH_BUCKETS dirs
-                .withColumn("_dst_bucket", cc.cid_bucket(F.col("dst")))
-            )
-
-        edges = self._stage("edges", build_edges, result, resume)
-
-        self.record_metric("pipeline", "edges_rows", edges.count())
+            self.record_metrics("transcript", {"segments": meta["segments_count"]})
         return result
 
 

@@ -15,6 +15,10 @@ when running locally, so plain ``python scripts/submit_pipeline.py``
 also works). On a cluster, size ``--shuffle-partitions`` to
 executors x cores x 2.
 
+``--preset`` picks one ``config.PRESETS`` EngineConfig (``prose_only``
+turns frames off: the transcript-only plan); ``--sample-every-n-lines``
+and ``--max-per-block`` override its mention knobs.
+
 Emits one JSON line with run_id, per-stage seconds, reused stages, and
 final table counts.
 """
@@ -78,8 +82,7 @@ def main() -> None:
             # before an empty docs stage is checkpointed to disk
             sys.exit(f"error: --only-path matched no document: {args.only_path}")
 
-    preset = PRESETS[args.preset] if args.preset else None
-    cfg = preset.config if preset else DEFAULT_CONFIG
+    cfg = PRESETS[args.preset] if args.preset else DEFAULT_CONFIG
     mention_overrides = {
         k: v
         for k, v in {
@@ -92,9 +95,8 @@ def main() -> None:
         # manual knobs sit ON TOP of the preset, reference semantics
         # (run.py: explicit flags override the preset yaml)
         cfg = replace(cfg, mentions=replace(cfg.mentions, **mention_overrides))
-        preset = replace(preset, config=cfg) if preset else None
 
-    pipe = Pipeline(spark, args.base_dir, cfg=cfg, preset=preset)
+    pipe = Pipeline(spark, args.base_dir, cfg=cfg)
     result = pipe.run(
         docs=docs, sf=args.sf, resume=not args.no_resume,
         stop_after=args.stop_after,

@@ -87,6 +87,21 @@ def test_lineage_and_metrics_written(spark, run):
         assert total == lineage_rows[stage], stage
 
 
+def test_run_releases_cc_scratch(spark, run):
+    """connected_components leaves its returned labels persisted over
+    <scratch_dir>/run_*/labels_final for the caller to own; the
+    components stage releases both once its table is written."""
+    import glob
+
+    pipe, _ = run
+    assert glob.glob(f"{pipe.base_dir}/tmp/cc_scratch/run_*") == []
+    cached = [
+        str(info.name())
+        for info in spark.sparkContext._jsc.sc().getRDDStorageInfo()
+    ]
+    assert [n for n in cached if "cc_scratch" in n] == []
+
+
 def test_no_overmerge(run):
     """Each canonical node's aliases must share one normalized stem family —
     guards against the LSH/CC over-merge failure mode."""

@@ -7,6 +7,7 @@ import os
 
 import pytest
 
+from corporate_knowledge_extractor_spark.config import PRESETS
 from corporate_knowledge_extractor_spark.plans.pipeline import Pipeline
 
 
@@ -70,11 +71,11 @@ def test_incremental_docs_anti_join(spark, tmp_path):
 
 def test_unknown_stop_after_fails_before_any_stage_is_written(spark, tmp_path):
     """A stop_after name the plan does not have (a typo, or a frames-path
-    stage under the frames-disabled preset) is refused before the docs
-    stage is checkpointed."""
+    stage under the frames-disabled prose_only config) is refused before
+    the docs stage is checkpointed."""
     for name, kwargs, stop_after in (
         ("typo", {}, "mention"),
-        ("prose", {"preset": "prose_only"}, "mentions"),
+        ("prose", {"cfg": PRESETS["prose_only"]}, "mentions"),
     ):
         base = str(tmp_path / name)
         with pytest.raises(ValueError):
