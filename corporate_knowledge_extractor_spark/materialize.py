@@ -30,6 +30,16 @@ the deserialization cost of the serialized form is below measurement
 noise for these fan-outs. The other direction (leaks, block size,
 release-ability) is documented above.
 
+Release contract, also owned here: a frame `materialize` persists
+inside a ``release_scope()`` is released when that scope exits, so an
+operator never takes a parameter for handing its persists back. The
+staged Pipeline wraps each stage's build + write in one scope, so every
+fan-out a stage persists dies with that stage. Outside a scope the
+caller releases: `release(df)` for frames it holds, or
+`spark.catalog.clearCache()` for query-shaped callers (extract_triples,
+the bench, the queries). Frames that outlive any one unit of work (an
+IVF index) are built outside a scope and carry their own `release`.
+
 Second trade owned here: persist does NOT truncate lineage the way
 localCheckpoint did. For the shallow iteration counts this engine runs
 (alias-graph CC converges in a handful of rounds) the plan growth is
@@ -42,18 +52,48 @@ executor-local blocks).
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+from contextlib import contextmanager
+from contextvars import ContextVar
+
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
+
+# the frames materialize() persisted in the innermost open release scope
+# of this thread/task (None: no scope open)
+_scope: ContextVar[list[DataFrame] | None] = ContextVar("release_scope", default=None)
 
 
 def materialize(df: DataFrame) -> DataFrame:
     """Eagerly persist ``df`` serialized-in-memory-with-disk-spill and
-    return it. The caller owns release: `release(df)` when a bounded
-    scope ends (iterative loops), or `spark.catalog.clearCache()` for
-    query-shaped callers (the bench harness does this per query)."""
+    return it. Inside a `release_scope()` the frame is released when the
+    innermost scope exits; outside one the caller owns release:
+    `release(df)` when a bounded scope ends (iterative loops), or
+    `spark.catalog.clearCache()` for query-shaped callers (the bench
+    harness does this per query)."""
     out = df.persist(StorageLevel.MEMORY_AND_DISK)
+    frames = _scope.get()
+    if frames is not None:
+        frames.append(out)
     out.count()
     return out
+
+
+@contextmanager
+def release_scope() -> Iterator[None]:
+    """Release every frame `materialize` persists inside the block when
+    the block exits (normally or by exception) — precise release for one
+    unit of work (a staged-pipeline stage) without threading a list of
+    frames through every operator, and without a session-wide clearCache
+    that would drop caches the caller owns. Scopes nest; a frame belongs
+    to the innermost open scope of the calling thread."""
+    frames: list[DataFrame] = []
+    token = _scope.set(frames)
+    try:
+        yield
+    finally:
+        _scope.reset(token)
+        release(*frames)
 
 
 def release(*dfs: DataFrame | None) -> None:

@@ -80,7 +80,6 @@ def align_segments_to_frames(
     frames: DataFrame,  # DOC + (ts, text, tags array<string>)
     cfg: AlignmentConfig = AlignmentConfig(),
     persist: bool = False,
-    scratch: list | None = None,
 ) -> DataFrame:
     """Returns DOC + (seg_id, start, end, speech, slide_text).
 
@@ -91,9 +90,9 @@ def align_segments_to_frames(
     each re-runs the per-doc frame sort; the post-argmax text join's
     recompute measured as the one anti-scaling phase of the stage
     (+17s@1 -> +20s@4 exec, BENCH/stage_diagnose_r05.json). Release
-    contract mirrors post_process: query-shaped callers free it with
-    clearCache; the staged pipeline passes ``scratch`` and releases
-    right after the stage write.
+    contract (materialize.py): the enclosing `release_scope()` releases
+    it — the staged pipeline's aligned stage runs in one — else the
+    caller's clearCache.
     """
     f = frames.select(
         *DOC,
@@ -119,8 +118,6 @@ def align_segments_to_frames(
         from corporate_knowledge_extractor_spark.materialize import materialize
 
         f = materialize(f.drop("f_tags"))
-        if scratch is not None:
-            scratch.append(f)
 
     s = segments.select(
         *DOC,

@@ -186,9 +186,11 @@ def connected_components(
 
     Storage contract: every intermediate (symmetrized edges, hot/cold
     halves, each superseded round's labels) is released before return;
-    only the *returned* label table is left persisted, and
-    ``result.unpersist()`` / ``spark.catalog.clearCache()`` frees it —
-    asserted by tests/test_materialize.py.
+    only the *returned* label table is left persisted, and the
+    materialize.py release contract frees it: the enclosing
+    `release_scope()` when it exits (the staged pipeline's components
+    stage), else ``result.unpersist()`` / ``spark.catalog.clearCache()``
+    — asserted by tests/test_materialize.py and tests/test_pipeline.py.
 
     Plan contract: the label recurrence references the previous labels
     twice per round (union + join; three times with a hot split), so the
@@ -211,7 +213,8 @@ def connected_components(
     cuts) is deleted immediately; when no ``scratch_dir`` was supplied the
     remaining dir is also removed at interpreter exit. Callers that pass
     a ``scratch_dir`` own labels_final's lifetime (delete it once the
-    returned frame is released or written out).
+    returned frame is released or written out; the staged pipeline
+    removes its per-stage ``tmp`` dir after each stage write).
 
     ``on_skew_stats({"max_join_key_rows", "hot_keys", "edges"})``
     (optional; an extra aggregate job plus the symmetric edge count,

@@ -29,6 +29,7 @@ from corporate_knowledge_extractor_spark.operators.linking import (
     hash_one_shingle,
     shingle_col,
 )
+from corporate_knowledge_extractor_spark.operators.skew import drop_hot_blocks
 
 
 def normalize_text(col: F.Column) -> F.Column:
@@ -350,17 +351,15 @@ def simhash_pairs_from_sig(
             for j in range(n_chunks)
         ]
     )
-    banded = materialize(
-        d.withColumn("c", F.explode(chunks))
-        .select(F.col("c.chunk_idx"), F.col("c.chunk"), "id", "sh")
-    )
     # hot-chunk cap: a cluster of identical documents shares all chunks;
     # unbounded blocks would go quadratic (same skew control as the
     # MinHash path)
-    sizes = banded.groupBy("chunk_idx", "chunk").agg(F.count(F.lit(1)).alias("_n"))
-    small = banded.join(
-        sizes.where(F.col("_n") <= max_block_size), ["chunk_idx", "chunk"], "inner"
-    ).select("chunk_idx", "chunk", "id", "sh")
+    small = drop_hot_blocks(
+        d.withColumn("c", F.explode(chunks))
+        .select(F.col("c.chunk_idx"), F.col("c.chunk"), "id", "sh"),
+        ["chunk_idx", "chunk"],
+        max_block_size,
+    )
     left = small.select("chunk_idx", "chunk", F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
     right = small.select("chunk_idx", "chunk", F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
     ham = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from corporate_knowledge_extractor_spark.config import LinkingConfig
+from corporate_knowledge_extractor_spark.operators.skew import drop_hot_blocks
 
 _P = 2_147_483_647  # Mersenne prime 2^31 - 1
 
@@ -162,24 +163,15 @@ def candidate_id_pairs(banded: DataFrame, cfg: LinkingConfig = LinkingConfig()) 
     """Distinct (id_a, id_b) candidate pairs from band collisions, with
     hot-block capping.
 
-    Blocks larger than `max_block_size` are dropped (ubiquitous tokens —
-    the Zipf head — would otherwise quadratically dominate; SURVEY.md §7
-    skew risk; precedent: the reference's max_total cap,
-    extractor.py:152-154). Block sizes come from a groupBy (map-side
-    partial agg), not a window — no sort needed. Post-cap the band_key
-    join is uniformly bounded, so no reducer can be hot.
+    Blocks larger than `max_block_size` are dropped (skew.drop_hot_blocks;
+    ubiquitous tokens — the Zipf head — would otherwise quadratically
+    dominate; SURVEY.md §7 skew risk; precedent: the reference's
+    max_total cap, extractor.py:152-154). Post-cap the band_key join is
+    uniformly bounded, so no reducer can be hot.
     """
-    # banded is scanned twice (sizes + join); materialize the slim
-    # (band_key, id) projection eagerly so the MinHash signature
-    # computation runs exactly once and concurrent branches never race
-    # on uncached partitions (materialize.py policy)
-    from corporate_knowledge_extractor_spark.materialize import materialize
-
-    banded = materialize(banded)
-    sizes = banded.groupBy("band_key").agg(F.count(F.lit(1)).alias("_bsz"))
-    small = banded.join(
-        sizes.where(F.col("_bsz") <= cfg.max_block_size), "band_key", "inner"
-    ).select("band_key", "id")
+    # the cap materializes the slim (band_key, id) projection, so the
+    # MinHash signature computation runs exactly once
+    small = drop_hot_blocks(banded, ["band_key"], cfg.max_block_size)
     left = small.select("band_key", F.col("id").alias("id_a"))
     right = small.select("band_key", F.col("id").alias("id_b"))
     return (

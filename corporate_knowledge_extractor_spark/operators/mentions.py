@@ -102,6 +102,16 @@ def tag_mentions(mentions: DataFrame) -> DataFrame:
     )
 
 
+def _type_order() -> F.Column:
+    """mention_type -> its fixed MENTION_TYPE_ORDER rank."""
+    return F.coalesce(
+        *[
+            F.when(F.col("mention_type") == t, F.lit(i))
+            for t, i in rules.MENTION_TYPE_ORDER.items()
+        ]
+    )
+
+
 def cap_mentions(mentions: DataFrame, cfg: MentionConfig = MentionConfig()) -> DataFrame:
     """Rate caps: at most `max_per_block` mentions per block and
     `max_total` per document — the reference's max_per_minute / max_total
@@ -116,13 +126,7 @@ def cap_mentions(mentions: DataFrame, cfg: MentionConfig = MentionConfig()) -> D
     ordering by (line_no, _torder); spelling it out lets the planner
     satisfy the second window with the first window's sort (one sort
     pass instead of two over the full mention set, guide §2.4)."""
-    type_order = F.coalesce(
-        *[
-            F.when(F.col("mention_type") == t, F.lit(i))
-            for t, i in rules.MENTION_TYPE_ORDER.items()
-        ]
-    )
-    m = mentions.withColumn("_torder", type_order)
+    m = mentions.withColumn("_torder", _type_order())
     w_block = W.partitionBy(*DOC_KEY, "block_id").orderBy("line_no", "_torder")
     w_doc = W.partitionBy(*DOC_KEY).orderBy("block_id", "line_no", "_torder")
     return (
@@ -160,18 +164,12 @@ def mention_stage(
             dedup_vs_previous_kept,
         )
 
-        type_order = F.coalesce(
-            *[
-                F.when(F.col("mention_type") == t, F.lit(i))
-                for t, i in rules.MENTION_TYPE_ORDER.items()
-            ]
-        )
         # multiplier derived from the type table: any value strictly above
         # every type_order keeps (line_no, type) keys collision-free even
         # if new mention types are added
         ord_span = max(rules.MENTION_TYPE_ORDER.values()) + 1
         m = dedup_vs_previous_kept(
-            m.withColumn("_ord", F.col("line_no") * ord_span + type_order),
+            m.withColumn("_ord", F.col("line_no") * ord_span + _type_order()),
             DOC_KEY,
             "_ord",
             "surface",

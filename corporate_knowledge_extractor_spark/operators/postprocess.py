@@ -74,11 +74,7 @@ def dedup_triples(triples: DataFrame) -> DataFrame:
 KNOWN_BROADCAST_MAX_ROWS = 1_000_000
 
 
-def validate_calls(
-    triples: DataFrame,
-    probe_known_size: bool = False,
-    scratch: list | None = None,
-) -> DataFrame:
+def validate_calls(triples: DataFrame, probe_known_size: bool = False) -> DataFrame:
     """J3 semi-join validation: keep `calls` edges only when the callee is
     defined or imported as a symbol *somewhere in the corpus* — the
     reference keeps qa_pairs only when their frame_id survived filtering
@@ -96,7 +92,9 @@ def validate_calls(
     counted first, and broadcast is hinted only under
     KNOWN_BROADCAST_MAX_ROWS — the statically-planned broadcast join
     never exchanges the triple side at all. Measured at sf1.0: 7.3-9.1k
-    -> 3.9-6.1k CPU jiffies for the validate pass, same rows."""
+    -> 3.9-6.1k CPU jiffies for the validate pass, same rows. The cached
+    dim follows the materialize.py release contract (released with the
+    enclosing `release_scope()`, else by the caller's clearCache)."""
     known = (
         triples.where(F.col("pred").isin("defines", "imports_symbol"))
         .select(F.col("obj").alias("_known"))
@@ -106,10 +104,6 @@ def validate_calls(
         from corporate_knowledge_extractor_spark.materialize import materialize
 
         known = materialize(known)  # eager: one scan builds dim + its count
-        if scratch is not None:
-            # precise-release contract (see post_process): every frame this
-            # call materializes is handed back for the caller to release
-            scratch.append(known)
         if known.count() <= KNOWN_BROADCAST_MAX_ROWS:
             known = F.broadcast(known)
     # single-pass form: a split/semi-join/union would scan the (expensive,
@@ -123,9 +117,9 @@ def validate_calls(
     )
 
 
-def categorize(triples: DataFrame) -> DataFrame:
-    """A5 keyword-count argmax (post_processor.py:178-201): score each
-    category by substring-keyword hits on the object surface; strict-
+def category_col(col: F.Column) -> F.Column:
+    """A5 keyword-count argmax (post_processor.py:178-201) over a string
+    column: score each category by substring-keyword hits; strict-
     improvement scan order means ties go to the earliest category and a
     zero score stays "general". Expressed as array_max over
     (score, -order, name) structs — one expression, no join, no UDF."""
@@ -137,7 +131,7 @@ def categorize(triples: DataFrame) -> DataFrame:
         *[
             F.struct(
                 sum(
-                    [F.contains(F.col("obj"), F.lit(k)).cast("int") for k in kws],
+                    [F.contains(col, F.lit(k)).cast("int") for k in kws],
                     F.lit(0),
                 ).alias("score"),
                 F.lit(-i).alias("neg_order"),
@@ -147,15 +141,15 @@ def categorize(triples: DataFrame) -> DataFrame:
         ]
     )
     best = F.array_max(scored)
-    return triples.withColumn(
-        "category",
-        F.when(best["score"] > 0, best["name"]).otherwise(F.lit(rules.DEFAULT_CATEGORY)),
-    )
+    return F.when(best["score"] > 0, best["name"]).otherwise(F.lit(rules.DEFAULT_CATEGORY))
 
 
-def post_process(
-    triples: DataFrame, persist: bool = False, scratch: list | None = None
-) -> DataFrame:
+def categorize(triples: DataFrame) -> DataFrame:
+    """Categorize each triple by its object surface (category_col)."""
+    return triples.withColumn("category", category_col(F.col("obj")))
+
+
+def post_process(triples: DataFrame, persist: bool = False) -> DataFrame:
     """Full chain in reference order (post_processor.py:33-71).
 
     The deduped table is a fan-out point: validate_calls scans it twice
@@ -165,20 +159,16 @@ def post_process(
     union + the dedup window sort) executes twice, measured ~1.5x on the
     staged triples stage at 100k docs. ``persist=True`` applies the
     repo materialization policy (eager serialized persist) at that
-    fan-out. Release contract: query-shaped callers free it with
-    clearCache (the bench does, per query); the staged pipeline passes
-    ``scratch`` (a list the materialized frame is appended to) and
-    releases it right after the stage write."""
+    fan-out. Release contract (materialize.py): inside a
+    `release_scope()` — the staged pipeline opens one per stage — both
+    persisted frames are released when the scope exits; query-shaped
+    callers free them with clearCache (the bench does, per query)."""
     deduped = dedup_triples(triples)
     if persist:
         from corporate_knowledge_extractor_spark.materialize import materialize
 
         deduped = materialize(deduped)
-        if scratch is not None:
-            scratch.append(deduped)
     # probe_known_size only when deduped is materialized: the size probe
     # is then a single cache scan; unpersisted callers would pay a full
     # re-execution of the upstream chain for the count
-    return categorize(
-        validate_calls(deduped, probe_known_size=persist, scratch=scratch)
-    )
+    return categorize(validate_calls(deduped, probe_known_size=persist))

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
 from corporate_knowledge_extractor_spark.materialize import materialize, release
+from corporate_knowledge_extractor_spark.operators.skew import drop_hot_blocks
 
 
 def dot(a: F.Column, b: F.Column) -> F.Column:
@@ -124,17 +125,15 @@ def embedding_neardup_pairs(
         F.col("id").alias("id_l"),
         F.col("v").alias("v_l"),
     )
-    right = materialize(
+    small = drop_hot_blocks(
         e.select(
             F.col("_b").alias("_bucket"),
             F.col("id").alias("id_r"),
             F.col("v").alias("v_r"),
-        )
+        ),
+        ["_bucket"],
+        max_block_size,
     )
-    sizes = right.groupBy("_bucket").agg(F.count(F.lit(1)).alias("_n"))
-    small = right.join(
-        sizes.where(F.col("_n") <= max_block_size), "_bucket", "inner"
-    ).select("_bucket", "id_r", "v_r")
     return (
         left.join(small, "_bucket")
         .where(F.col("id_l") != F.col("id_r"))

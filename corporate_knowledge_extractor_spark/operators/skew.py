@@ -1,4 +1,4 @@
-"""Explicit skew handling: salted joins.
+"""Explicit skew handling: salted joins and the hot-block cap.
 
 north_rule: "partitioning / shuffle / skew handled explicitly". AQE's
 skew-join splitting handles sort-merge joins automatically at runtime;
@@ -11,12 +11,18 @@ Pattern: explode the small/dimension side `salt_buckets` times, scatter
 the fact side uniformly with a deterministic hash-salt, join on
 (key, salt). Salt is derived from stable row content (never rand() —
 determinism contract).
+
+Blocked self-joins (LSH bands, SimHash chunks, embedding buckets) bound
+their work the other way: `drop_hot_blocks` drops every block above a
+size cap before the self-join, so no block goes quadratic.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from corporate_knowledge_extractor_spark.materialize import materialize
 
 
 def add_salt(df: DataFrame, cols: list[str], buckets: int, out: str = "_salt") -> DataFrame:
@@ -47,3 +53,18 @@ def salted_join(
     f = add_salt(fact, salt_cols, buckets)
     d = explode_salt(dim, buckets)
     return f.join(d, [key, "_salt"], how).drop("_salt")
+
+
+def drop_hot_blocks(df: DataFrame, keys: list[str], max_block_size: int) -> DataFrame:
+    """``df`` without the rows of blocks (rows sharing ``keys``) larger
+    than ``max_block_size`` — the hot-block cap of every blocked
+    self-join: a Zipf-head block would otherwise dominate quadratically.
+    ``df`` is materialized first (it is scanned twice: sizes + join back,
+    and the eager persist keeps the two branches from racing on uncached
+    partitions); block sizes come from a groupBy (map-side partial agg),
+    not a window, so no sort is needed."""
+    df = materialize(df)
+    sizes = df.groupBy(*keys).agg(F.count(F.lit(1)).alias("_n"))
+    return df.join(
+        sizes.where(F.col("_n") <= max_block_size), keys, "inner"
+    ).select(*df.columns)

@@ -45,7 +45,7 @@ from corporate_knowledge_extractor_spark.config import (
     EngineConfig,
 )
 from corporate_knowledge_extractor_spark.corpus import generate_corpus
-from corporate_knowledge_extractor_spark.materialize import materialize, release
+from corporate_knowledge_extractor_spark.materialize import materialize, release_scope
 from corporate_knowledge_extractor_spark.operators import canonicalize as cc
 from corporate_knowledge_extractor_spark.operators import linking
 from corporate_knowledge_extractor_spark.operators.align import align_segments_to_frames
@@ -109,7 +109,9 @@ def extract_triples(docs: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG,
     persisted blocks, while localCheckpoint RDDs leak until GC — repeated
     bench runs degraded measurably from the accumulation. The eager
     count keeps the round-1 rule: concurrent downstream scans must never
-    race on uncached partitions.
+    race on uncached partitions. Release contract (materialize.py): its
+    callers run it outside any `release_scope()` and free its persists
+    with clearCache; called inside a scope, they go when the scope exits.
 
     `tags` is deliberately not computed here — the triple path never
     reads it (the staged Pipeline's mentions table keeps tags for the
@@ -133,13 +135,11 @@ def extract_triples(docs: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG,
     return post_process(synthesize_triples(mentions), persist=persist)
 
 
-def build_aligned(blocks: DataFrame, mentions: DataFrame, cfg: AlignmentConfig,
-                  scratch: list) -> DataFrame:
+def build_aligned(blocks: DataFrame, mentions: DataFrame, cfg: AlignmentConfig) -> DataFrame:
     """Stage [5] analogue (scripts/run.py:83, src/align/aligner.py:4-20):
     align each block segment ("speech") to its best-scoring mention
     ("frame") — J1 scored interval join. Context table only; the triple
-    path consumes mentions directly. The indexed-frame persist inside
-    align lands in ``scratch``."""
+    path consumes mentions directly."""
     segs = block_segments(blocks).select(
         "repo", "path", "commit",
         F.col("block_id").alias("seg_id"),
@@ -153,7 +153,7 @@ def build_aligned(blocks: DataFrame, mentions: DataFrame, cfg: AlignmentConfig,
         F.col("surface").alias("text"),
         "tags",
     )
-    return align_segments_to_frames(segs, frames, cfg, persist=True, scratch=scratch)
+    return align_segments_to_frames(segs, frames, cfg, persist=True)
 
 
 def build_edges(triples: DataFrame, entities: DataFrame, components: DataFrame) -> DataFrame:
@@ -210,9 +210,8 @@ class PipelineResult:
     reused_stages: list[str] = field(default_factory=list)
 
 
-# a stage builder: (tables of the earlier stages, the stage's scratch
-# list) -> the stage's DataFrame
-Build = Callable[[dict[str, DataFrame], list], DataFrame]
+# a stage builder: tables of the earlier stages -> the stage's DataFrame
+Build = Callable[[dict[str, DataFrame]], DataFrame]
 
 
 class Pipeline:
@@ -240,6 +239,9 @@ class Pipeline:
             .withColumn("stage", F.lit(stage))
             .withColumn("wall_ms", F.lit(float(wall_ms)))
             .select("run_id", "stage", "partition_id", "output_rows", "wall_ms")
+            # one file per append: the partition ids are taken before the
+            # groupBy's exchange, so collapsing its output changes no value
+            .coalesce(1)
         )
         # the per-partition frame is tiny (one row per partition); total
         # rows fall out of the same aggregation for free and feed the
@@ -251,11 +253,13 @@ class Pipeline:
         return int(total)
 
     def record_metrics(self, stage: str, metrics: dict[str, float]) -> None:
-        """Appends one metrics row per entry, all in one write (one job)."""
+        """Appends one metrics row per entry, all in one write (one job,
+        one file: a local frame of a few rows would otherwise spread over
+        the default parallelism and leave empty parquet files)."""
         rows = self.spark.createDataFrame(
             [(self.run_id, stage, name, float(v)) for name, v in metrics.items()],
             "run_id string, stage string, metric string, value double",
-        )
+        ).coalesce(1)
         write_table(rows, f"{self.base_dir}/metrics", mode="append")
 
     # stage-table partition columns: docs partitioned by lang so downstream
@@ -278,22 +282,17 @@ class Pipeline:
             result.tables[name] = read_table(self.spark, path)
             return
         t0 = time.time()
-        # what the builder persists or spills to disk for this stage only;
-        # released the moment the stage table is written (precise release,
-        # not a session-wide clearCache that would drop caches the caller
-        # owns): frames are unpersisted, directories removed
-        scratch: list = []
-        try:
+        # what the builder persists (materialize.py) or spills under
+        # base/tmp lives for this stage only: both go the moment the stage
+        # table is written — precise release, not a session-wide
+        # clearCache that would drop caches the caller owns
+        with release_scope():
             write_table(
-                build(result.tables, scratch), path, mode="overwrite",
+                build(result.tables), path, mode="overwrite",
                 partition_by=self.STAGE_PARTITIONING.get(name),
             )
             wall_ms = (time.time() - t0) * 1000
-        finally:
-            release(*(x for x in scratch if isinstance(x, DataFrame)))
-            for x in scratch:
-                if isinstance(x, str):
-                    shutil.rmtree(x, ignore_errors=True)
+        shutil.rmtree(f"{self.base_dir}/tmp", ignore_errors=True)
         out = read_table(self.spark, path)  # read back: downstream plans scan parquet
         result.stage_seconds[name] = wall_ms / 1000
         total_rows = self._record_lineage(name, out, wall_ms)
@@ -321,16 +320,16 @@ class Pipeline:
 
     # -- the pipeline -----------------------------------------------------
 
-    def _components(self, t: dict[str, DataFrame], scratch: list) -> DataFrame:
-        # scratch inside the run dir: CC's lineage-cut tables are scrubbed
-        # to labels_final at convergence; the returned labels (a persisted
-        # scan of labels_final) and the dir itself go with the stage scratch
-        scratch_dir = f"{self.base_dir}/tmp/cc_scratch"
-        labels = cc.connected_components(
+    def _components(self, t: dict[str, DataFrame]) -> DataFrame:
+        # scratch inside the run dir's per-stage tmp: CC's lineage-cut
+        # tables are scrubbed to labels_final at convergence; the returned
+        # labels (a persisted scan of labels_final) go with the stage's
+        # release scope, and _stage removes the dir after the write
+        return cc.connected_components(
             t["entities"],
             t["links"],
             self.cfg.canonicalize,
-            scratch_dir=scratch_dir,
+            scratch_dir=f"{self.base_dir}/tmp/cc_scratch",
             on_iteration=lambda i, changed: self.record_metrics(
                 "components", {f"cc_changed_iter_{i}": changed}
             ),
@@ -341,14 +340,12 @@ class Pipeline:
                 "components", {f"cc_{k}": v for k, v in s.items()}
             ),
         )
-        scratch += [labels, scratch_dir]
-        return labels
 
     def _plan(self, docs: DataFrame | None, sf: float) -> list[tuple[str, Build]]:
         cfg = self.cfg
         plan: list[tuple[str, Build]] = [
-            ("docs", lambda t, s: docs if docs is not None else generate_corpus(self.spark, sf=sf)),
-            ("blocks", lambda t, s: blocked_lines(t["docs"])),
+            ("docs", lambda t: docs if docs is not None else generate_corpus(self.spark, sf=sf)),
+            ("blocks", lambda t: blocked_lines(t["docs"])),
         ]
         if not cfg.frames_enabled:
             # the reference's audio-only early exit (scripts/run.py:52-74):
@@ -357,29 +354,28 @@ class Pipeline:
             # applied to transcripts"); run() then builds the report from
             # segments
             return plan + [
-                ("transcript", lambda t, s: redact_columns(
+                ("transcript", lambda t: redact_columns(
                     block_segments(t["blocks"]), ["text"], cfg.redaction)),
             ]
         return plan + [
-            ("mentions", lambda t, s: redact_columns(
+            ("mentions", lambda t: redact_columns(
                 tag_mentions(mention_stage(t["blocks"], cfg.mentions)),
                 ["surface"],
                 cfg.redaction,
             )),
-            ("aligned", lambda t, s: build_aligned(t["blocks"], t["mentions"], cfg.alignment, s)),
+            ("aligned", lambda t: build_aligned(t["blocks"], t["mentions"], cfg.alignment)),
             # the dedup fan-out inside post_process is persisted for the
-            # duration of this stage only
-            ("triples", lambda t, s: post_process(
-                synthesize_triples(t["mentions"]), persist=True, scratch=s)),
-            ("entities", lambda t, s: linking.extract_entities(t["triples"])),
-            ("links", lambda t, s: linking.score_pairs(
+            # duration of this stage only (the stage's release scope)
+            ("triples", lambda t: post_process(synthesize_triples(t["mentions"]), persist=True)),
+            ("entities", lambda t: linking.extract_entities(t["triples"])),
+            ("links", lambda t: linking.score_pairs(
                 linking.entity_candidate_pairs(t["entities"], cfg.linking),
                 t["entities"],
                 cfg.linking,
             )),
             ("components", self._components),
-            ("nodes", lambda t, s: cc.build_nodes(t["entities"], t["components"])),
-            ("edges", lambda t, s: build_edges(t["triples"], t["entities"], t["components"])),
+            ("nodes", lambda t: cc.build_nodes(t["entities"], t["components"])),
+            ("edges", lambda t: build_edges(t["triples"], t["entities"], t["components"])),
         ]
 
     def run(

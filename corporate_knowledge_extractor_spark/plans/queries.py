@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from corporate_knowledge_extractor_spark.functions import rules
 from corporate_knowledge_extractor_spark.operators import dedup, similarity, textstats
+from corporate_knowledge_extractor_spark.operators.postprocess import category_col
 from corporate_knowledge_extractor_spark.sources.sinks import load_testdata
 
 
@@ -170,52 +171,18 @@ def runlength_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "category_argmax",
-    None,  # registered with SQL below via _category_sql(); see builder
-    doc="A5 keyword-count argmax categorization (post_processor.py:178-201)",
-)
-def category_argmax(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents", fanout=True)
-    # per-category score as a plain codegen'd sum of contains() casts —
-    # the filter(array(keywords), ...) lambda form is interpreted
-    # (guide §4.1); identical counts recorded in OPTIMIZATION_r06.md
-    # "category_argmax"
-    scored = F.array(
-        *[
-            F.struct(
-                sum(
-                    [F.contains(F.col("text"), F.lit(k)).cast("int") for k in kws],
-                    F.lit(0),
-                ).alias("score"),
-                F.lit(-i).alias("neg_order"),
-                F.lit(cat).alias("name"),
-            )
-            for i, (cat, kws) in enumerate(rules.CATEGORY_KEYWORDS)
-        ]
-    )
-    best = F.array_max(scored)
-    cat = F.when(best["score"] > 0, best["name"]).otherwise(F.lit(rules.DEFAULT_CATEGORY))
-    return docs.withColumn("category", cat).groupBy("category").agg(
-        F.count(F.lit(1)).alias("n_docs")
-    )
-
-
-def _category_score_sql(cat_keywords) -> str:
+def _category_score_sql(col: str, cat_keywords) -> str:
     return " + ".join(
-        f"(CASE WHEN contains(text, '{kw}') THEN 1 ELSE 0 END)" for kw in cat_keywords
+        f"(CASE WHEN contains({col}, '{kw}') THEN 1 ELSE 0 END)"
+        for kw in cat_keywords
     )
 
 
-def _category_sql() -> str:
-    scores = ",\n      ".join(
-        f"({_category_score_sql(kws)}) AS s_{cat}"
-        for cat, kws in rules.CATEGORY_KEYWORDS
-    )
-    # strict-improvement scan order: first category with the max positive score
-    # strict-improvement scan parity (post_processor.py:189-199): category i
-    # wins iff its score is positive, strictly beats all earlier categories,
-    # and is >= all later ones.
+def _category_case_sql() -> str:
+    """Strict-improvement scan parity (post_processor.py:189-199) over the
+    s_<category> score columns: category i wins iff its score is
+    positive, strictly beats all earlier categories, and is >= all later
+    ones — the first category with the max positive score."""
     cases = []
     cats = [c for c, _ in rules.CATEGORY_KEYWORDS]
     for i, cat in enumerate(cats):
@@ -223,6 +190,14 @@ def _category_sql() -> str:
         conds += [f"s_{c2} < s_{cat}" for c2 in cats[:i]]
         conds += [f"s_{c2} <= s_{cat}" for c2 in cats[i + 1 :]]
         cases.append(f"WHEN {' AND '.join(conds)} THEN '{cat}'")
+    return f"CASE {' '.join(cases)} ELSE '{rules.DEFAULT_CATEGORY}' END"
+
+
+def _category_sql() -> str:
+    scores = ",\n      ".join(
+        f"({_category_score_sql('text', kws)}) AS s_{cat}"
+        for cat, kws in rules.CATEGORY_KEYWORDS
+    )
     return f"""
     WITH scored AS (
       SELECT doc_id,
@@ -230,16 +205,23 @@ def _category_sql() -> str:
       FROM documents
     ), labeled AS (
       SELECT doc_id,
-             CASE {' '.join(cases)} ELSE '{rules.DEFAULT_CATEGORY}' END AS category
+             {_category_case_sql()} AS category
       FROM scored
     )
     SELECT category, count(*) AS n_docs FROM labeled GROUP BY category
     """
 
 
-REGISTRY["category_argmax"] = Query(
-    fn=category_argmax, sql=_category_sql(), doc=REGISTRY["category_argmax"].doc
+@query(
+    "category_argmax",
+    _category_sql(),
+    doc="A5 keyword-count argmax categorization (post_processor.py:178-201)",
 )
+def category_argmax(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = _t(spark, sf_dir, "documents", fanout=True)
+    return docs.withColumn("category", category_col(F.col("text"))).groupBy("category").agg(
+        F.count(F.lit(1)).alias("n_docs")
+    )
 
 
 # =====================================================================
@@ -930,20 +912,6 @@ def embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.brute_force_topk(e, q, k=10).select("vec_id", "cosine_sim", "rank")
 
 
-@query(
-    "lang_id_confusion",
-    None,  # SQL oracle below (built from the same LANG_STOPWORDS constants)
-    doc="heuristic language-ID vs labeled lang (operators/textstats.py)",
-)
-def lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _t(spark, sf_dir, "documents", fanout=True)
-    return (
-        d.withColumn("pred_lang", textstats.lang_id(F.col("text")))
-        .groupBy("lang", "pred_lang")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
 def _lang_id_sql() -> str:
     toks = r"string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')"
     scores = ",\n      ".join(
@@ -968,9 +936,18 @@ def _lang_id_sql() -> str:
     """
 
 
-REGISTRY["lang_id_confusion"] = Query(
-    fn=lang_id_confusion, sql=_lang_id_sql(), doc=REGISTRY["lang_id_confusion"].doc
+@query(
+    "lang_id_confusion",
+    _lang_id_sql(),
+    doc="heuristic language-ID vs labeled lang (operators/textstats.py)",
 )
+def lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = _t(spark, sf_dir, "documents", fanout=True)
+    return (
+        d.withColumn("pred_lang", textstats.lang_id(F.col("text")))
+        .groupBy("lang", "pred_lang")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
 
 
 @query(
@@ -995,9 +972,23 @@ def token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _bpe_token_sql() -> str:
+    pat = textstats.BPE_ISH_PATTERN.replace("'", "''")
+    words = r"string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')"
+    return f"""
+    SELECT lang,
+           CAST(sum(len(regexp_extract_all(text, '{pat}'))) AS BIGINT)
+             AS total_bpe_tokens,
+           round(avg(len(regexp_extract_all(text, '{pat}'))
+                     * 1.0 / greatest(len({words}), 1)), 4)
+             AS avg_bpe_per_word
+    FROM documents GROUP BY lang
+    """
+
+
 @query(
     "bpe_token_stats",
-    None,  # SQL registered below (generated from the shared pattern)
+    _bpe_token_sql(),
     doc="BPE-ish subword token budgeting: GPT-2-style pre-tokenizer "
     "boundaries via regexp_extract_all (operators/textstats.py), the "
     "per-lang token-count estimate a training pipeline budgets with",
@@ -1014,25 +1005,6 @@ def bpe_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             4,
         ).alias("avg_bpe_per_word"),
     )
-
-
-def _bpe_token_sql() -> str:
-    pat = textstats.BPE_ISH_PATTERN.replace("'", "''")
-    words = r"string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')"
-    return f"""
-    SELECT lang,
-           CAST(sum(len(regexp_extract_all(text, '{pat}'))) AS BIGINT)
-             AS total_bpe_tokens,
-           round(avg(len(regexp_extract_all(text, '{pat}'))
-                     * 1.0 / greatest(len({words}), 1)), 4)
-             AS avg_bpe_per_word
-    FROM documents GROUP BY lang
-    """
-
-
-REGISTRY["bpe_token_stats"] = Query(
-    fn=bpe_token_stats, sql=_bpe_token_sql(), doc=REGISTRY["bpe_token_stats"].doc
-)
 
 
 @query(
@@ -1057,9 +1029,37 @@ def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _quality_sql() -> str:
+    stops = list(textstats.EN_STOPWORDS)
+    toks = r"string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')"
+    return f"""
+    WITH feats AS (
+      SELECT lang,
+             len({toks}) AS n_tok,
+             length(text) AS n_chars,
+             round(len(list_filter({toks}, t -> list_contains({stops!r}, t)))
+                   * 1.0 / greatest(len({toks}), 1), 4) AS stop_ratio,
+             round(length(regexp_replace(text, '[^.,;:!?]', '', 'g'))
+                   * 1.0 / greatest(length(text), 1), 4) AS punct_ratio
+      FROM documents
+    ), scored AS (
+      SELECT lang, stop_ratio,
+             round((CASE WHEN n_tok >= 5 AND n_tok <= 1000 THEN 0.4 ELSE 0.0 END)
+                   + least(stop_ratio * 2, 0.3)
+                   + (CASE WHEN punct_ratio <= 0.1 THEN 0.3 ELSE 0.0 END), 4)
+               AS quality_score
+      FROM feats
+    )
+    SELECT lang, round(avg(quality_score), 4) AS avg_quality,
+           round(avg(stop_ratio), 4) AS avg_stopword_ratio,
+           count(*) AS n
+    FROM scored GROUP BY lang
+    """
+
+
 @query(
     "quality_scores",
-    None,  # mirrors a multi-branch formula; checked rows-only + pytest
+    _quality_sql(),
     doc="quality scoring: length/punct/stopword ratios (operators/textstats.py)",
 )
 def quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1075,23 +1075,6 @@ def quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 # =====================================================================
 # Non-SQL-expressible (rows-only checks; correctness via pytest oracle)
 # =====================================================================
-
-
-@query(
-    "kg_triples",
-    None,  # full DuckDB oracle registered below via _kg_sql (lazy)
-    doc="the KG pipeline's extraction stage on the synthetic corpus "
-    "(P/R gate in tests/test_pipeline.py + full DuckDB oracle _kg_sql); "
-    "the corpus scale follows sf_dir all the way to sf0.1, so the hash "
-    "gate covers the bench scale (tests/test_oracle_sf01.py)",
-)
-def kg_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from corporate_knowledge_extractor_spark.corpus import generate_corpus
-    from corporate_knowledge_extractor_spark.plans.pipeline import extract_triples
-
-    sf = 0.001 if "0.001" in sf_dir else (0.01 if "0.01" in sf_dir else 0.1)
-    docs = generate_corpus(spark, sf=sf)
-    return extract_triples(docs)
 
 
 def _kg_sql() -> str:
@@ -1149,17 +1132,9 @@ def _kg_sql() -> str:
         return f"trim(regexp_replace(lower({col}), '\\s+', ' ', 'g'))"
 
     score_cols = ",\n           ".join(
-        f"({_category_score_sql_on('obj', kws)}) AS s_{cat}"
+        f"({_category_score_sql('obj', kws)}) AS s_{cat}"
         for cat, kws in rules.CATEGORY_KEYWORDS
     )
-    cats = [c for c, _ in rules.CATEGORY_KEYWORDS]
-    cases = []
-    for i, cat in enumerate(cats):
-        conds = [f"s_{cat} > 0"]
-        conds += [f"s_{c2} < s_{cat}" for c2 in cats[:i]]
-        conds += [f"s_{c2} <= s_{cat}" for c2 in cats[i + 1 :]]
-        cases.append(f"WHEN {' AND '.join(conds)} THEN '{cat}'")
-    category_case = f"CASE {' '.join(cases)} ELSE '{rules.DEFAULT_CATEGORY}' END"
 
     return f"""
     WITH corpus AS (
@@ -1254,14 +1229,54 @@ def _kg_sql() -> str:
       FROM validated
     )
     SELECT repo, path, commit, subj, pred, obj, frame_id, line_no,
-           {category_case} AS category
+           {_category_case_sql()} AS category
     FROM cat_scored
     """
 
 
 @query(
+    "kg_triples",
+    # lazy oracles (zero-arg builders, resolved by resolve_sql at harness
+    # time) for the kg family: building one materializes twin-corpus
+    # parquet, which must not happen at module import
+    _kg_sql,
+    doc="the KG pipeline's extraction stage on the synthetic corpus "
+    "(P/R gate in tests/test_pipeline.py + full DuckDB oracle _kg_sql); "
+    "the corpus scale follows sf_dir all the way to sf0.1, so the hash "
+    "gate covers the bench scale (tests/test_oracle_sf01.py)",
+)
+def kg_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from corporate_knowledge_extractor_spark.corpus import generate_corpus
+    from corporate_knowledge_extractor_spark.plans.pipeline import extract_triples
+
+    sf = 0.001 if "0.001" in sf_dir else (0.01 if "0.01" in sf_dir else 0.1)
+    docs = generate_corpus(spark, sf=sf)
+    return extract_triples(docs)
+
+
+def _cc_canonical_sql() -> str:
+    kg = _kg_sql()
+    return f"""
+    WITH t AS (SELECT * FROM ({kg})), surf AS (
+      SELECT obj AS surface FROM t
+      WHERE pred IN ('defines', 'calls', 'imports_symbol')
+      UNION ALL
+      SELECT string_split(subj, '::')[2] AS surface FROM t WHERE pred = 'calls'
+    ), ent AS (
+      SELECT DISTINCT surface FROM surf
+    ), keyed AS (
+      SELECT surface,
+             regexp_replace(replace(replace(lower(surface), '_', ''), '-', ''),
+                            'v2$', '') AS k
+      FROM ent
+    )
+    SELECT surface, min(surface) OVER (PARTITION BY k) AS canonical FROM keyed
+    """
+
+
+@query(
     "cc_canonical",
-    None,  # SQL registered below via _cc_canonical_sql()
+    _cc_canonical_sql,
     doc="canonicalization end-to-end: extract entities from the KG "
     "triples, build deterministic alias edges (equal stripped-norm key: "
     "casefold, drop _/-, strip trailing v2), resolve with the iterative "
@@ -1297,26 +1312,6 @@ def cc_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("surface", "canonical")
         .distinct()
     )
-
-
-def _cc_canonical_sql() -> str:
-    kg = _kg_sql()
-    return f"""
-    WITH t AS (SELECT * FROM ({kg})), surf AS (
-      SELECT obj AS surface FROM t
-      WHERE pred IN ('defines', 'calls', 'imports_symbol')
-      UNION ALL
-      SELECT string_split(subj, '::')[2] AS surface FROM t WHERE pred = 'calls'
-    ), ent AS (
-      SELECT DISTINCT surface FROM surf
-    ), keyed AS (
-      SELECT surface,
-             regexp_replace(replace(replace(lower(surface), '_', ''), '-', ''),
-                            'v2$', '') AS k
-      FROM ent
-    )
-    SELECT surface, min(surface) OVER (PARTITION BY k) AS canonical FROM keyed
-    """
 
 
 def _entities_cte_sql() -> str:
@@ -1368,9 +1363,19 @@ def _alias_components(spark: SparkSession, sf_dir: str):
     return keyed.join(comp, "entity_id"), triples
 
 
+def _graph_nodes_sql() -> str:
+    return f"""{_entities_cte_sql()}
+    SELECT first(surface ORDER BY freq DESC, surface ASC) AS canonical,
+           array_to_string(list_sort(list_distinct(list(surface))), '|') AS aliases,
+           count(*) AS n_aliases,
+           CAST(sum(freq) AS BIGINT) AS total_freq
+    FROM keyed GROUP BY k
+    """
+
+
 @query(
     "graph_nodes",
-    None,  # SQL registered below via _graph_nodes_sql()
+    _graph_nodes_sql,
     doc="graph materialize, node side: canonicalize.build_nodes semantics "
     "(canonical = most-frequent-then-smallest alias, sorted alias set, "
     "freq totals) over CC-resolved components, projected to engine-"
@@ -1392,19 +1397,33 @@ def graph_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _graph_nodes_sql() -> str:
-    return f"""{_entities_cte_sql()}
-    SELECT first(surface ORDER BY freq DESC, surface ASC) AS canonical,
-           array_to_string(list_sort(list_distinct(list(surface))), '|') AS aliases,
-           count(*) AS n_aliases,
-           CAST(sum(freq) AS BIGINT) AS total_freq
-    FROM keyed GROUP BY k
+def _graph_edges_sql() -> str:
+    return f"""{_entities_cte_sql()}, canon_per_k AS (
+      SELECT k, first(surface ORDER BY freq DESC, surface ASC) AS canonical
+      FROM keyed GROUP BY k
+    ), canon AS (
+      SELECT keyed.surface, canon_per_k.canonical
+      FROM keyed JOIN canon_per_k USING (k)
+    ), rewritten AS (
+      SELECT t.subj AS src_name,
+             CASE WHEN t.pred IN ('defines', 'calls', 'imports_symbol')
+                  THEN coalesce(c.canonical, t.obj) ELSE t.obj END AS dst_name,
+             t.pred, t.category, t.frame_id,
+             t.repo || '/' || t.path AS doc
+      FROM t LEFT JOIN canon c
+        ON t.obj = c.surface AND t.pred IN ('defines', 'calls', 'imports_symbol')
+    )
+    SELECT src_name, dst_name, pred, category,
+           count(*) AS weight,
+           min(frame_id) AS frame_id,
+           min(doc) AS example_doc
+    FROM rewritten GROUP BY src_name, dst_name, pred, category
     """
 
 
 @query(
     "graph_edges",
-    None,  # SQL registered below via _graph_edges_sql()
+    _graph_edges_sql,
     doc="graph materialize, edge side: pipeline.build_edges semantics "
     "(rewrite linked-pred objects to their canonical alias, aggregate "
     "edge weights + min frame_id + min example doc), projected to the "
@@ -1441,93 +1460,8 @@ def graph_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _graph_edges_sql() -> str:
-    return f"""{_entities_cte_sql()}, canon_per_k AS (
-      SELECT k, first(surface ORDER BY freq DESC, surface ASC) AS canonical
-      FROM keyed GROUP BY k
-    ), canon AS (
-      SELECT keyed.surface, canon_per_k.canonical
-      FROM keyed JOIN canon_per_k USING (k)
-    ), rewritten AS (
-      SELECT t.subj AS src_name,
-             CASE WHEN t.pred IN ('defines', 'calls', 'imports_symbol')
-                  THEN coalesce(c.canonical, t.obj) ELSE t.obj END AS dst_name,
-             t.pred, t.category, t.frame_id,
-             t.repo || '/' || t.path AS doc
-      FROM t LEFT JOIN canon c
-        ON t.obj = c.surface AND t.pred IN ('defines', 'calls', 'imports_symbol')
-    )
-    SELECT src_name, dst_name, pred, category,
-           count(*) AS weight,
-           min(frame_id) AS frame_id,
-           min(doc) AS example_doc
-    FROM rewritten GROUP BY src_name, dst_name, pred, category
-    """
 
 
-def _category_score_sql_on(col: str, cat_keywords) -> str:
-    return " + ".join(
-        f"(CASE WHEN contains({col}, '{kw}') THEN 1 ELSE 0 END)"
-        for kw in cat_keywords
-    )
-
-
-# lazy oracles (callables, resolved by resolve_sql at harness time): the
-# kg family materializes twin-corpus parquet when built, which must not
-# happen at module import
-REGISTRY["kg_triples"] = Query(
-    fn=kg_triples, sql=_kg_sql, doc=REGISTRY["kg_triples"].doc
-)
-
-REGISTRY["cc_canonical"] = Query(
-    fn=cc_canonical, sql=_cc_canonical_sql, doc=REGISTRY["cc_canonical"].doc
-)
-
-REGISTRY["graph_nodes"] = Query(
-    fn=graph_nodes, sql=_graph_nodes_sql, doc=REGISTRY["graph_nodes"].doc
-)
-REGISTRY["graph_edges"] = Query(
-    fn=graph_edges, sql=_graph_edges_sql, doc=REGISTRY["graph_edges"].doc
-)
-
-
-@query(
-    "linking_score_parity",
-    None,  # SQL registered below via _linking_score_sql()
-    doc="entity-linking scorer cross-engine: candidate pairs from a "
-    "deterministic 4-char-prefix block (the engine-neutral stand-in for "
-    "the xxhash64 MinHash bands, which stay pytest-checked), scored with "
-    "the SAME char-3-shingle Jaccard linking.score_pairs uses — proves "
-    "the similarity kernel against DuckDB on real extracted entities",
-)
-def linking_score_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from corporate_knowledge_extractor_spark.corpus import generate_corpus
-    from corporate_knowledge_extractor_spark.operators import linking
-    from corporate_knowledge_extractor_spark.plans.pipeline import extract_triples
-
-    from corporate_knowledge_extractor_spark.materialize import materialize
-
-    sf = 0.001 if "0.001" in sf_dir else (0.01 if "0.01" in sf_dir else 0.1)
-    docs = generate_corpus(spark, sf=sf)
-    ents = materialize(
-        linking.extract_entities(extract_triples(docs))
-        .select("surface", "norm")
-        .withColumn("_blk", F.substring("norm", 1, 4))
-    )
-    sizes = ents.groupBy("_blk").agg(F.count(F.lit(1)).alias("_n"))
-    small = ents.join(sizes.where(F.col("_n") <= 200), "_blk").select(
-        "_blk", "surface", linking.shingle_col(F.col("norm"), 3).alias("sh")
-    )
-    a = small.select("_blk", F.col("surface").alias("surface_a"), F.col("sh").alias("sh_a"))
-    b = small.select("_blk", F.col("surface").alias("surface_b"), F.col("sh").alias("sh_b"))
-    jac = F.size(F.array_intersect("sh_a", "sh_b")) / F.size(F.array_union("sh_a", "sh_b"))
-    return (
-        a.join(b, "_blk")
-        .where(F.col("surface_a") < F.col("surface_b"))
-        .withColumn("similarity", F.round(jac, 4))
-        .where(F.col("similarity") >= 0.5)
-        .select("surface_a", "surface_b", "similarity")
-    )
 
 
 def _linking_score_sql() -> str:
@@ -1570,11 +1504,43 @@ def _linking_score_sql() -> str:
     """
 
 
-REGISTRY["linking_score_parity"] = Query(
-    fn=linking_score_parity,
-    sql=_linking_score_sql,
-    doc=REGISTRY["linking_score_parity"].doc,
+@query(
+    "linking_score_parity",
+    _linking_score_sql,
+    doc="entity-linking scorer cross-engine: candidate pairs from a "
+    "deterministic 4-char-prefix block (the engine-neutral stand-in for "
+    "the xxhash64 MinHash bands, which stay pytest-checked), scored with "
+    "the SAME char-3-shingle Jaccard linking.score_pairs uses — proves "
+    "the similarity kernel against DuckDB on real extracted entities",
 )
+def linking_score_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from corporate_knowledge_extractor_spark.corpus import generate_corpus
+    from corporate_knowledge_extractor_spark.operators import linking
+    from corporate_knowledge_extractor_spark.plans.pipeline import extract_triples
+
+    from corporate_knowledge_extractor_spark.materialize import materialize
+
+    sf = 0.001 if "0.001" in sf_dir else (0.01 if "0.01" in sf_dir else 0.1)
+    docs = generate_corpus(spark, sf=sf)
+    ents = materialize(
+        linking.extract_entities(extract_triples(docs))
+        .select("surface", "norm")
+        .withColumn("_blk", F.substring("norm", 1, 4))
+    )
+    sizes = ents.groupBy("_blk").agg(F.count(F.lit(1)).alias("_n"))
+    small = ents.join(sizes.where(F.col("_n") <= 200), "_blk").select(
+        "_blk", "surface", linking.shingle_col(F.col("norm"), 3).alias("sh")
+    )
+    a = small.select("_blk", F.col("surface").alias("surface_a"), F.col("sh").alias("sh_a"))
+    b = small.select("_blk", F.col("surface").alias("surface_b"), F.col("sh").alias("sh_b"))
+    jac = F.size(F.array_intersect("sh_a", "sh_b")) / F.size(F.array_union("sh_a", "sh_b"))
+    return (
+        a.join(b, "_blk")
+        .where(F.col("surface_a") < F.col("surface_b"))
+        .withColumn("similarity", F.round(jac, 4))
+        .where(F.col("similarity") >= 0.5)
+        .select("surface_a", "surface_b", "similarity")
+    )
 
 
 @query(
@@ -1601,20 +1567,6 @@ def minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
     return dedup.simhash_pairs(d, max_hamming=6)
-
-
-@query(
-    "embedding_ann",
-    None,  # full DuckDB oracle registered below via _ann_sql()
-    doc="LSH-bucketed approximate nearest neighbors with Hamming-1 "
-    "multiprobe (operators/similarity.py)",
-)
-def embedding_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _t(spark, sf_dir, "embeddings", fanout=True)
-    q = e.where(F.col("vec_id") < 4).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding")
-    )
-    return similarity.ann_topk(e, q, dim=64, k=5, num_planes=6)
 
 
 def _ann_sql(dim: int = 64, k: int = 5, num_planes: int = 6) -> str:
@@ -1656,25 +1608,18 @@ def _ann_sql(dim: int = 64, k: int = 5, num_planes: int = 6) -> str:
     """
 
 
-REGISTRY["embedding_ann"] = Query(
-    fn=embedding_ann, sql=_ann_sql(), doc=REGISTRY["embedding_ann"].doc
-)
-
-
 @query(
-    "embedding_neardup",
-    None,  # full DuckDB oracle registered below via _embedding_neardup_sql()
-    doc="embedding-cosine near-duplicate pairs via LSH sign-bucket "
-    "blocking + exact cosine verify (operators/similarity.py) — the "
-    "fifth dedup strategy; the testdata embeddings are random (max "
-    "pairwise cosine ~0.48), so the 0.4 threshold exercises a real "
-    "candidate/verify path",
+    "embedding_ann",
+    _ann_sql(),
+    doc="LSH-bucketed approximate nearest neighbors with Hamming-1 "
+    "multiprobe (operators/similarity.py)",
 )
-def embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
+def embedding_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "embeddings", fanout=True)
-    return similarity.embedding_neardup_pairs(
-        e, dim=64, threshold=0.4, num_planes=4
+    q = e.where(F.col("vec_id") < 4).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding")
     )
+    return similarity.ann_topk(e, q, dim=64, k=5, num_planes=6)
 
 
 def _embedding_neardup_sql(
@@ -1715,41 +1660,19 @@ def _embedding_neardup_sql(
     """
 
 
-REGISTRY["embedding_neardup"] = Query(
-    fn=embedding_neardup,
-    sql=_embedding_neardup_sql(),
-    doc=REGISTRY["embedding_neardup"].doc,
-)
-
-
 @query(
-    "embedding_ivf",
-    None,  # full DuckDB oracle registered below via _ivf_full_sql()
-    doc="IVF approximate top-k (ivf_build: coarse k-means quantizer + "
-    "persisted inverted lists; ivf_search: nprobe list scan — "
-    "operators/similarity.py), FULLY oracled since round 5: the corpus "
-    "is quantized to the 2^-10 binary grid at read, which makes every "
-    "per-component Lloyd sum exact in double precision (sums of exact "
-    "multiples of 2^-10 stay exact far beyond this row count), so the "
-    "centroid means are independent of aggregation order and the whole "
-    "build+search chain is bit-identical across engines; mean_grid=4096 "
-    "keeps refined centroids on a grid round over round. Recall vs "
-    "brute force stays asserted in tests/test_dedup_similarity.py",
+    "embedding_neardup",
+    _embedding_neardup_sql(),
+    doc="embedding-cosine near-duplicate pairs via LSH sign-bucket "
+    "blocking + exact cosine verify (operators/similarity.py) — the "
+    "fifth dedup strategy; the testdata embeddings are random (max "
+    "pairwise cosine ~0.48), so the 0.4 threshold exercises a real "
+    "candidate/verify path",
 )
-def embedding_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
+def embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "embeddings", fanout=True)
-    quant = e.select(
-        "vec_id",
-        F.transform(
-            "embedding",
-            lambda x: F.floor(x.cast("double") * 1024 + F.lit(0.5)) / 1024,
-        ).alias("embedding"),
-    )
-    q = quant.where(F.col("vec_id") < 4).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding")
-    )
-    return similarity.ivf_topk(
-        quant, q, dim=64, k=5, n_centroids=8, nprobe=3, mean_grid=4096
+    return similarity.embedding_neardup_pairs(
+        e, dim=64, threshold=0.4, num_planes=4
     )
 
 
@@ -1824,43 +1747,34 @@ def _ivf_full_sql(
     """
 
 
-REGISTRY["embedding_ivf"] = Query(
-    fn=embedding_ivf, sql=_ivf_full_sql(), doc=REGISTRY["embedding_ivf"].doc
-)
-
-
 @query(
-    "ivf_assign_parity",
-    None,  # SQL registered below via _ivf_assign_sql()
-    doc="per-vector centroid ranking (assignment = rank 1, probe list = "
-    "rank <= nprobe) against the literal seed centroids on the RAW "
-    "(unquantized) embeddings — the direct cross-engine check of the "
-    "assign/probe kernel that embedding_ivf (fully oracled via "
-    "quantization since round 5) exercises only through the whole "
-    "build+search chain",
+    "embedding_ivf",
+    _ivf_full_sql(),
+    doc="IVF approximate top-k (ivf_build: coarse k-means quantizer + "
+    "persisted inverted lists; ivf_search: nprobe list scan — "
+    "operators/similarity.py), FULLY oracled since round 5: the corpus "
+    "is quantized to the 2^-10 binary grid at read, which makes every "
+    "per-component Lloyd sum exact in double precision (sums of exact "
+    "multiples of 2^-10 stay exact far beyond this row count), so the "
+    "centroid means are independent of aggregation order and the whole "
+    "build+search chain is bit-identical across engines; mean_grid=4096 "
+    "keeps refined centroids on a grid round over round. Recall vs "
+    "brute force stays asserted in tests/test_dedup_similarity.py",
 )
-def ivf_assign_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
+def embedding_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "embeddings", fanout=True)
-    cents = similarity.seed_centroids(64, 8)
-    cent_lit = [F.array(*[F.lit(v) for v in c]) for c in cents]
-    scored = F.array(
-        *[
-            F.struct(
-                similarity.cosine(F.col("embedding"), cent_lit[i]).alias("s"),
-                F.lit(i).alias("c"),
-            )
-            for i in range(len(cents))
-        ]
+    quant = e.select(
+        "vec_id",
+        F.transform(
+            "embedding",
+            lambda x: F.floor(x.cast("double") * 1024 + F.lit(0.5)) / 1024,
+        ).alias("embedding"),
     )
-    sel = F.slice(F.reverse(F.array_sort(scored)), 1, 3)
-    return (
-        e.select("vec_id", F.posexplode(sel).alias("pos", "p"))
-        .select(
-            "vec_id",
-            (F.col("pos") + 1).cast("int").alias("rank"),
-            F.col("p.c").alias("cluster"),
-            F.round(F.col("p.s"), 4).alias("cosine_sim"),
-        )
+    q = quant.where(F.col("vec_id") < 4).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding")
+    )
+    return similarity.ivf_topk(
+        quant, q, dim=64, k=5, n_centroids=8, nprobe=3, mean_grid=4096
     )
 
 
@@ -1893,11 +1807,39 @@ def _ivf_assign_sql(dim: int = 64, n_centroids: int = 8, nprobe: int = 3) -> str
     """
 
 
-REGISTRY["ivf_assign_parity"] = Query(
-    fn=ivf_assign_parity,
-    sql=_ivf_assign_sql(),
-    doc=REGISTRY["ivf_assign_parity"].doc,
+@query(
+    "ivf_assign_parity",
+    _ivf_assign_sql(),
+    doc="per-vector centroid ranking (assignment = rank 1, probe list = "
+    "rank <= nprobe) against the literal seed centroids on the RAW "
+    "(unquantized) embeddings — the direct cross-engine check of the "
+    "assign/probe kernel that embedding_ivf (fully oracled via "
+    "quantization since round 5) exercises only through the whole "
+    "build+search chain",
 )
+def ivf_assign_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    e = _t(spark, sf_dir, "embeddings", fanout=True)
+    cents = similarity.seed_centroids(64, 8)
+    cent_lit = [F.array(*[F.lit(v) for v in c]) for c in cents]
+    scored = F.array(
+        *[
+            F.struct(
+                similarity.cosine(F.col("embedding"), cent_lit[i]).alias("s"),
+                F.lit(i).alias("c"),
+            )
+            for i in range(len(cents))
+        ]
+    )
+    sel = F.slice(F.reverse(F.array_sort(scored)), 1, 3)
+    return (
+        e.select("vec_id", F.posexplode(sel).alias("pos", "p"))
+        .select(
+            "vec_id",
+            (F.col("pos") + 1).cast("int").alias("rank"),
+            F.col("p.c").alias("cluster"),
+            F.round(F.col("p.s"), 4).alias("cosine_sim"),
+        )
+    )
 
 
 # =====================================================================
@@ -2193,9 +2135,12 @@ def _simhash_parity_sql(n_bits: int = 32) -> str:
     """
 
 
+
+
+
 @retired_parity(
     "simhash_parity",
-    None,  # SQL registered below (generated from the same bit construction)
+    _simhash_parity_sql(),
     doc="cross-engine SimHash parity: 32-bit per-bit majority vote where "
     "bit b of a shingle = parity of hex digit b of md5(shingle) — proves "
     "the SimHash majority-vote construction (dedup.simhash64's core) "
@@ -2227,44 +2172,3 @@ def simhash_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return base.select("doc_id", sim.cast("long").alias("simhash32"))
 
 
-RETIRED_PARITY["simhash_parity"] = Query(
-    fn=simhash_parity,
-    sql=_simhash_parity_sql(),
-    doc=RETIRED_PARITY["simhash_parity"].doc,
-)
-
-
-def _quality_sql() -> str:
-    stops = list(textstats.EN_STOPWORDS)
-    toks = r"string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')"
-    return f"""
-    WITH feats AS (
-      SELECT lang,
-             len({toks}) AS n_tok,
-             length(text) AS n_chars,
-             round(len(list_filter({toks}, t -> list_contains({stops!r}, t)))
-                   * 1.0 / greatest(len({toks}), 1), 4) AS stop_ratio,
-             round(length(regexp_replace(text, '[^.,;:!?]', '', 'g'))
-                   * 1.0 / greatest(length(text), 1), 4) AS punct_ratio
-      FROM documents
-    ), scored AS (
-      SELECT lang, stop_ratio,
-             round((CASE WHEN n_tok >= 5 AND n_tok <= 1000 THEN 0.4 ELSE 0.0 END)
-                   + least(stop_ratio * 2, 0.3)
-                   + (CASE WHEN punct_ratio <= 0.1 THEN 0.3 ELSE 0.0 END), 4)
-               AS quality_score
-      FROM feats
-    )
-    SELECT lang, round(avg(quality_score), 4) AS avg_quality,
-           round(avg(stop_ratio), 4) AS avg_stopword_ratio,
-           count(*) AS n
-    FROM scored GROUP BY lang
-    """
-
-
-# upgrade quality_scores from rows-only to a full SQL-oracle check
-REGISTRY["quality_scores"] = Query(
-    fn=REGISTRY["quality_scores"].fn,
-    sql=_quality_sql(),
-    doc=REGISTRY["quality_scores"].doc,
-)

@@ -187,6 +187,27 @@ def test_minhash_and_embedding_blocks_release_via_clearcache(spark):
     assert _stored_rdds(spark) == []  # ...and fully releasable
 
 
+def test_minhash_pairs_release_with_their_scope(spark):
+    """minhash_lsh_pairs persists three fan-outs (base text, candidate
+    pairs, the candidates' shingle table) plus linking's banded table;
+    run inside `release_scope()` they are all released when the scope
+    exits — precise release with no clearCache and no extra parameter."""
+    from corporate_knowledge_extractor_spark.materialize import release_scope
+    from corporate_knowledge_extractor_spark.operators import dedup
+
+    spark.catalog.clearCache()
+    docs = spark.createDataFrame(
+        [(i, f"alpha beta gamma delta epsilon zeta eta theta token{i % 7}")
+         for i in range(300)],
+        "doc_id long, text string",
+    )
+    with release_scope():
+        pairs = dedup.minhash_lsh_pairs(docs).collect()
+        assert len(_stored_rdds(spark)) > 0
+    assert len(pairs) > 0
+    assert _stored_rdds(spark) == []
+
+
 def test_cc_local_contraction_identical_labels_fewer_rounds(spark):
     """contract_edges_locally must preserve connectivity exactly (global
     labels identical to raw-edge CC on both graph shapes) and, on a deep

@@ -195,11 +195,11 @@ def test_categorize_argmax_and_default(spark):
 
 def test_post_process_persist_fanout_contract(spark):
     """post_process(persist=True) must (a) emit exactly the same rows as
-    the unpersisted form, (b) hand the materialized dedup frame back via
-    `scratch`, and (c) leave zero storage behind once the caller
-    releases it — the staged pipeline's precise-release contract."""
+    the unpersisted form, (b) persist its fan-out frames inside the
+    enclosing `release_scope()`, and (c) leave zero storage behind once
+    that scope exits — the staged pipeline's precise-release contract."""
     from corporate_knowledge_extractor_spark.corpus import generate_corpus
-    from corporate_knowledge_extractor_spark.materialize import release
+    from corporate_knowledge_extractor_spark.materialize import release_scope
     from corporate_knowledge_extractor_spark.operators.mentions import (
         mention_stage,
         junk_block_filter as jbf,
@@ -208,20 +208,20 @@ def test_post_process_persist_fanout_contract(spark):
         synthesize_triples,
     )
 
+    def stored() -> int:
+        return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
+
     spark.catalog.clearCache()
-    baseline = len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
+    baseline = stored()
     docs = generate_corpus(spark, n_docs=80)
     mentions = mention_stage(jbf(assign_blocks(split_lines(docs))))
 
     plain = {tuple(r) for r in post_process(synthesize_triples(mentions)).collect()}
-    scratch: list = []
-    persisted_df = post_process(
-        synthesize_triples(mentions), persist=True, scratch=scratch
-    )
-    persisted = {tuple(r) for r in persisted_df.collect()}
+    with release_scope():
+        persisted_df = post_process(synthesize_triples(mentions), persist=True)
+        persisted = {tuple(r) for r in persisted_df.collect()}
+        # the materialized dedup frame AND the validate-calls known dim
+        # (cached for the broadcast size probe) are both held in the scope
+        assert stored() == baseline + 2
     assert persisted == plain and len(plain) > 100
-    # the materialized dedup frame AND the validate-calls known dim
-    # (cached for the broadcast size probe) are both handed back
-    assert len(scratch) == 2
-    release(*scratch)
-    assert len(spark.sparkContext._jsc.sc().getRDDStorageInfo()) == baseline
+    assert stored() == baseline

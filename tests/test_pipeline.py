@@ -31,6 +31,9 @@ def test_public_annotations_resolve():
 @pytest.fixture(scope="module")
 def run(spark, tmp_path_factory):
     base = str(tmp_path_factory.mktemp("ckg_e2e"))
+    # start from empty storage so test_run_releases_cc_scratch sees only
+    # what this run leaves cached
+    spark.catalog.clearCache()
     pipe = Pipeline(spark, base)
     result = pipe.run(sf=0.001, resume=False)
     return pipe, result
@@ -88,18 +91,35 @@ def test_lineage_and_metrics_written(spark, run):
 
 
 def test_run_releases_cc_scratch(spark, run):
-    """connected_components leaves its returned labels persisted over
-    <scratch_dir>/run_*/labels_final for the caller to own; the
-    components stage releases both once its table is written."""
-    import glob
+    """Every frame a stage persists dies with that stage: after the run
+    nothing the run persisted is still cached — connected_components'
+    returned labels over <scratch_dir>/run_*/labels_final, linking's
+    banded table, post_process's and align's fan-outs — and the
+    per-stage base/tmp scratch dir is gone."""
+    import os
 
     pipe, _ = run
-    assert glob.glob(f"{pipe.base_dir}/tmp/cc_scratch/run_*") == []
     cached = [
         str(info.name())
         for info in spark.sparkContext._jsc.sc().getRDDStorageInfo()
     ]
-    assert [n for n in cached if "cc_scratch" in n] == []
+    assert cached == []
+    assert not os.path.exists(f"{pipe.base_dir}/tmp")
+
+
+def test_metrics_and_lineage_files_hold_rows(run):
+    """Each metrics/lineage append writes its few rows as one file: no
+    parquet file under base/metrics or base/lineage is empty."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    pipe, _ = run
+    for table in ("metrics", "lineage"):
+        files = glob.glob(f"{pipe.base_dir}/{table}/**/*.parquet", recursive=True)
+        assert files, table
+        empty = [f for f in files if pq.ParquetFile(f).metadata.num_rows == 0]
+        assert empty == [], table
 
 
 def test_no_overmerge(run):
