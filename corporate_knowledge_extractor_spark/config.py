@@ -63,14 +63,15 @@ class LinkingConfig:
 @dataclass(frozen=True)
 class CanonicalizeConfig:
     salt_buckets: int = 16  # salting fan-out for hot labels
-    # partition-local union-find contraction of the edge list before the
-    # iterative phase (canonicalize.contract_edges_locally): collapses
-    # every within-partition path to depth 1, so the driver-round count
-    # becomes O(partitions a component spans) instead of O(component
-    # diameter). Off for the pipeline's alias pool (diameter ~2-4, the
-    # extra Python stage costs more than 1-2 saved rounds); callers with
-    # arbitrary-depth graphs (near-dup clustering over LSH pairs) turn
-    # it on.
+    # pointer jumping in every round (canonicalize._pointer_jump): besides
+    # the propagation hop, each vertex's label vertex takes the smallest
+    # label its members saw and every vertex jumps two labels up, so a
+    # long path closes in a few rounds instead of one per hop, whatever
+    # the order of its ids. Each round costs one more aggregate and two
+    # broadcastable joins. Off for the pipeline's alias pool (diameter
+    # ~2-4: one hop per round already converges in a handful of rounds);
+    # callers with arbitrary-depth graphs (near-dup clustering over LSH
+    # pairs) turn it on.
     local_contract: bool = False
     # vertices whose degree reaches this go through the salted join path
     # (their edge lists would otherwise land on one reducer per round);

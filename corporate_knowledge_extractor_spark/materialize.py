@@ -45,7 +45,7 @@ localCheckpoint did. For the shallow iteration counts this engine runs
 (alias-graph CC converges in a handful of rounds) the plan growth is
 negligible; iterative callers that can run deep cut lineage explicitly
 by round-tripping through parquet (see
-canonicalize.connected_components' ``LINEAGE_CUT_EVERY``), which is also
+canonicalize.connected_components' ``PLAN_COPY_BUDGET``), which is also
 the crash-safe form a real cluster wants (reliable checkpoint, not
 executor-local blocks).
 """

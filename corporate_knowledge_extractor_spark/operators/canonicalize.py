@@ -7,23 +7,28 @@ transitive only through chains (`get_user_data` ~ `getuserdata` ~
 (BASELINE.json north_star).
 
 Implemented as driver-looped min-label propagation: each round is one
-propagation hop, one shuffle-join job. Materialization follows the
-repo-wide policy (materialize.py): every round's label table is an *eager serialized
+propagation hop, one shuffle-join job (plus a pointer jump on deep
+graphs, see below). Materialization follows the repo-wide policy
+(materialize.py): every round's label table is an *eager serialized
 persist*, and the previous round's table is explicitly released right
 after the convergence count — the textbook iterative-Spark pattern. At
 10^12-vertex scale the per-round label tables are the largest objects in
 the job; localCheckpoint (the round-2 form) leaked every round's table
 until GC because clearCache() does not release checkpoint RDDs.
-Lineage is cut by a parquet round-trip every ``LINEAGE_CUT_EVERY``
-rounds (persist alone does not truncate the logical plan — unbounded
-lineage is the classic iterative-Spark failure mode, SURVEY.md §7); the
-cut is crash-safe reliable storage, which is what a real cluster wants
-anyway. Convergence is detected with a cheap changed-count aggregate and
+Lineage is cut by a parquet round-trip every few rounds, as many as
+``PLAN_COPY_BUDGET`` allows (persist alone does not truncate the
+logical plan — unbounded lineage is the classic iterative-Spark failure
+mode, SURVEY.md §7); the cut is crash-safe reliable storage, which is
+what a real cluster wants anyway. Convergence is detected with a cheap
+changed-count aggregate and
 the loop is bounded by ``MAX_ROUNDS`` with an assert — alias clusters
 are shallow (diameter ~2-4), so this converges in a handful of rounds
 even at 10^12 scale and the cut rarely fires. Deep graphs (near-dup
-chains) take fewer rounds through partition-local contraction
-(``contract_edges_locally``).
+chains) take fewer rounds through native pointer jumping
+(``CanonicalizeConfig.local_contract``, ``_pointer_jump``): every round
+also hooks each label's vertex onto the smallest label its members saw
+and jumps every vertex two labels up, so a long path closes in a few
+rounds whatever the order of its ids.
 
 Skew: a Zipf-headed alias graph has hub vertices whose full edge list
 hashes to ONE reducer in each round's plain equi-join (AQE's skew-split
@@ -47,95 +52,33 @@ from corporate_knowledge_extractor_spark.materialize import materialize, release
 from corporate_knowledge_extractor_spark.operators.skew import add_salt, explode_salt
 
 # CC fixpoint bound (SURVEY.md §7 risk), one hop per round: a component
-# of diameter d converges in d + 1 rounds
+# of diameter d converges in d + 1 rounds (far fewer with pointer jumping)
 MAX_ROUNDS = 40
-# rounds between parquet cuts of the label lineage. A round references
-# the incoming labels in the cold join and the union, and again in the
-# hot semi-join when there is a hot split, so the plan grows 2x or 3x
-# per round; persist caches blocks, not plans, so only the cut bounds
-# re-analysis. 2^6 and 3^4 both keep it under ~100 copies (3^6 with a
-# hot split ran the 8 GB driver heap out in plan-string generation).
-LINEAGE_CUT_EVERY = 6
-LINEAGE_CUT_EVERY_HOT = 4
+# rounds between parquet cuts of the label lineage are as many as keep
+# the plan under ~PLAN_COPY_BUDGET copies of the incoming labels. A round
+# references them in the cold join and the union, again in the hot
+# semi-join when there is a hot split and twice more in the shortcut
+# joins when it pointer-jumps, so the plan grows 2x-5x per round;
+# persist caches blocks, not plans, so only the cut bounds re-analysis
+# (3^6 copies with a hot split ran the 8 GB driver heap out in
+# plan-string generation).
+PLAN_COPY_BUDGET = 100
 
 
-def contract_edges_locally(
-    edges: DataFrame,  # (id_a, id_b)
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Partition-local union-find contraction: collapse each partition's
-    edges to a spanning forest (member -> local min root) BEFORE the
-    iterative global phase.
-
-    This is the standard big-graph CC preprocessing (the map-side
-    combine of connected components): a partition with E edges over V
-    distinct endpoints emits at most V-1 forest edges, and — the part
-    that matters for the deep-graph regime — any path that lies inside
-    one partition contracts to depth 1, so the GLOBAL graph's diameter
-    drops to roughly the number of partitions a component spans. The
-    driver-sequenced round count of the iterative phase (its measured
-    cost floor, BENCH/cc_diagnose_r05.json) is diameter-bound, so at
-    10^12-edge scale this turns O(component diameter) rounds over the
-    full edge set into O(partitions spanned) rounds over a forest.
-
-    Connectivity is exactly preserved (each partition's forest connects
-    precisely the vertices its edges connected); the global phase
-    re-derives true component minima, so labels are identical to
-    running on the raw edges — asserted in tests/test_materialize.py.
-
-    Edges are range-partitioned by ``id_a`` first: real corpora write
-    near-sorted ids (parquet row-group locality), so range partitioning
-    maximizes the chance both endpoints land together. Any partitioning
-    is CORRECT; a bad one just contracts less.
-    """
-    import pandas as pd
-
-    if num_partitions is None:
-        sess = edges.sparkSession
-        num_partitions = int(sess.conf.get("spark.sql.shuffle.partitions"))
-    ranged = edges.repartitionByRange(num_partitions, "id_a")
-
-    def _uf(batches):
-        # ONE union-find across every Arrow batch of the partition
-        # (mapInPandas splits a partition into ~10k-row batches; a
-        # per-batch forest would still be correct but contracts less)
-        parent: dict = {}
-
-        def find(x):
-            r = x
-            while parent[r] != r:
-                r = parent[r]
-            while parent[x] != r:  # path compression
-                parent[x], x = r, parent[x]
-            return r
-
-        for pdf in batches:
-            for a, b in zip(pdf["id_a"].values, pdf["id_b"].values):
-                if a not in parent:
-                    parent[a] = a
-                if b not in parent:
-                    parent[b] = b
-                ra, rb = find(a), find(b)
-                if ra != rb:
-                    # union by min keeps roots deterministic per partition
-                    if rb < ra:
-                        ra, rb = rb, ra
-                    parent[rb] = ra
-        if parent:
-            members = list(parent)
-            roots = [find(m) for m in members]
-            out = pd.DataFrame({"id_a": roots, "id_b": members})
-            yield out[out.id_a != out.id_b]
-
-    return ranged.mapInPandas(_uf, schema=edges.select("id_a", "id_b").schema)
+def _rounds_per_cut(label_refs: int) -> int:
+    """Largest k with label_refs ** k <= PLAN_COPY_BUDGET: 2 -> 6,
+    3 -> 4, 4 -> 3, 5 -> 2."""
+    k = 1
+    while label_refs ** (k + 1) <= PLAN_COPY_BUDGET:
+        k += 1
+    return k
 
 
 def _symmetrize(edges: DataFrame) -> DataFrame:
     """Undirected (id_a, id_b) edges -> distinct directed (src, dst) rows,
     both directions of every edge. One explode over a two-element array
     reads ``edges`` once; a union of the two projections read it twice,
-    so an unmaterialized upstream (the local contraction's mapInPandas
-    union-find) ran twice."""
+    so an unmaterialized upstream (the minhash verify join) ran twice."""
     both = F.array(
         F.struct(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
         F.struct(F.col("id_b").alias("src"), F.col("id_a").alias("dst")),
@@ -172,6 +115,47 @@ def _neighbor_labels(sym_cold, sym_hot, labels, hot_keys, buckets: int) -> DataF
     return cold.unionByName(hot)
 
 
+def _pointer_jump(hop: DataFrame, labels: DataFrame, label_type: str) -> DataFrame:
+    """Pointer jumping on one hop's ``(entity_id, component, _old)``
+    rows, ``component`` = the hop's label m(v) and ``_old`` = the
+    incoming label L(v):
+
+    * parent hook: every row also offers m(v) to the vertex L(v), and a
+      min aggregate keeps each vertex's smallest offer H(v) (its map-side
+      partial aggregate bounds a root's fan-in);
+    * shortcut: each vertex then takes ``least(H(v), L(H(v)),
+      L(L(H(v))))``, two left joins of the incoming ``labels``.
+
+    Labels only fall and every label names a vertex of the same
+    component, so the fixpoint is still the component minimum; a long
+    path closes in a few rounds instead of one round per hop (ten
+    200-vertex chains with shuffled ids: 11 rounds). The second jump
+    closes a 4-deep edit chain one round sooner than one jump does."""
+    both = F.array(
+        F.struct("entity_id", "component", "_old"),
+        F.struct(
+            F.col("_old").alias("entity_id"),
+            F.col("component"),
+            F.lit(None).cast(label_type).alias("_old"),
+        ),
+    )
+    hooked = (
+        hop.select(F.explode(both).alias("_r"))
+        .select("_r.*")
+        # an edge endpoint missing from `labels` has no incoming label
+        .where(F.col("entity_id").isNotNull())
+        .groupBy("entity_id")
+        .agg(F.min("component").alias("component"), F.min("_old").alias("_old"))
+    )
+    parent = labels.select(F.col("entity_id").alias("_p"), F.col("component").alias("_pc"))
+    grand = labels.select(F.col("entity_id").alias("_g"), F.col("component").alias("_gc"))
+    return (
+        hooked.join(parent, hooked.component == parent._p, "left")
+        .join(grand, F.col("_pc") == grand._g, "left")
+        .select("entity_id", F.least("component", "_pc", "_gc").alias("component"), "_old")
+    )
+
+
 def connected_components(
     vertices: DataFrame,  # (entity_id)
     edges: DataFrame,  # (id_a, id_b) undirected
@@ -193,15 +177,16 @@ def connected_components(
     — asserted by tests/test_materialize.py and tests/test_pipeline.py.
 
     Plan contract: the label recurrence references the previous labels
-    twice per round (union + join; three times with a hot split), so the
-    logical plan DOUBLES per iteration — with a lazy upstream chain (the kg extraction DAG) the
+    twice per round (union + join; once more with a hot split and twice
+    more with pointer jumping), so the logical plan grows 2x-5x per
+    iteration — with a lazy upstream chain (the kg extraction DAG) the
     exponential re-analysis OOMs the *driver* within a handful of rounds
     (persist caches blocks, not plans; localCheckpoint hid this in round
     2 at the price of leaked RDDs). Both inputs are therefore cut to
     parquet scans in ``scratch_dir`` once at entry — at 10^12 scale the
     edge/vertex tables live on storage anyway — and the label lineage is
-    re-cut through parquet every ``LINEAGE_CUT_EVERY`` rounds
-    (``LINEAGE_CUT_EVERY_HOT`` with a hot split; the GraphX/GraphFrames
+    re-cut through parquet every ``_rounds_per_cut(refs)`` rounds (6, 4,
+    3 or 2 for 2, 3, 4 or 5 references; the GraphX/GraphFrames
     checkpointInterval pattern, reliable + crash-safe) so deep graphs
     stay bounded too.
 
@@ -263,10 +248,6 @@ def connected_components(
         df.write.mode("overwrite").parquet(path)
         return spark.read.parquet(path)
 
-    if cfg.local_contract:
-        # contract BEFORE the symmetrize cut so the forest (not the raw
-        # edge list) is what lands in scratch and feeds every round
-        edges = contract_edges_locally(edges)
     sym = materialize(_cut(_symmetrize(edges), "sym"))
 
     # static hot/cold split on src degree (the join key's fan-out); edges
@@ -326,7 +307,8 @@ def connected_components(
 
     from pyspark.sql import Observation
 
-    cut_every = LINEAGE_CUT_EVERY if sym_hot is None else LINEAGE_CUT_EVERY_HOT
+    label_refs = 2 + (sym_hot is not None) + 2 * cfg.local_contract
+    cut_every = _rounds_per_cut(label_refs)
     for i in range(MAX_ROUNDS):
         # One propagation hop per round. Convergence is FUSED into the
         # propagation aggregate: the old label rides the union as `_old`
@@ -344,11 +326,15 @@ def connected_components(
         comp_type = dict(labels.dtypes)["component"]
         cur = labels.withColumn("_old", F.col("component"))
         nbr = _neighbor_labels(sym_cold, sym_hot, cur, hot_keys, cfg.salt_buckets)
-        new_labels = (
+        hop = (
             cur.unionByName(nbr.withColumn("_old", F.lit(None).cast(comp_type)))
             .groupBy("entity_id")
             .agg(F.min("component").alias("component"), F.min("_old").alias("_old"))
-            .observe(
+        )
+        if cfg.local_contract:
+            hop = _pointer_jump(hop, labels, comp_type)
+        new_labels = (
+            hop.observe(
                 obs,
                 F.sum(
                     (F.col("component") != F.col("_old")).cast("long")
@@ -379,7 +365,7 @@ def connected_components(
             _scrub_scratch(keep="labels_final")
             return final
         if (i + 1) % cut_every == 0:
-            # deep graph: re-cut the doubling label lineage so analysis
+            # deep graph: re-cut the growing label lineage so analysis
             # cost and recompute chains stay bounded (see plan contract)
             cut = _cut(labels, f"labels_cut_{i + 1}")
             release(labels)

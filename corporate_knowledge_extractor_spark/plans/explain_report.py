@@ -23,6 +23,10 @@ CHECKS = {
     # in the FINAL plan, so plan_text() executes the frame first
     "codegen": re.compile(r"^\s*[:+\-| ]*\* ?[A-Z]|\[codegen id :", re.M),
     "partition_pruning": re.compile(r"PartitionFilters: \[(?!\])"),
+    # rows handed to Python workers (pandas/Arrow UDFs, mapInPandas)
+    "python_eval": re.compile(
+        r"ArrowEvalPython|BatchEvalPython|MapInPandas|MapInArrow|FlatMapGroupsInPandas"
+    ),
 }
 
 AUDITED = [
@@ -33,6 +37,8 @@ AUDITED = [
     "semi_join_customers", # broadcast left-semi expected
     "category_argmax",     # wide expression, codegen
     "minhash_neardup",     # LSH self-join
+    "simhash_neardup",     # native SimHash aggregate + chunk self-join
+    "neardup_clusters",    # pairs -> iterative CC (final labels scan)
     "embedding_topk",      # broadcast crossJoin + window
     "embedding_ann",       # bucket equi-join + multiprobe explode
     "kg_triples",          # flagship extraction chain + mentions fan-out

@@ -2143,7 +2143,7 @@ def _simhash_parity_sql(n_bits: int = 32) -> str:
     _simhash_parity_sql(),
     doc="cross-engine SimHash parity: 32-bit per-bit majority vote where "
     "bit b of a shingle = parity of hex digit b of md5(shingle) — proves "
-    "the SimHash majority-vote construction (dedup.simhash64's core) "
+    "the SimHash majority-vote construction (dedup.simhash_signatures' core) "
     "independent of engine hash functions, the simhash analogue of "
     "minhash_parity",
 )

@@ -73,6 +73,49 @@ def test_simhash_pigeonhole_guarantee(spark):
         dedup.simhash_pairs_from_sig(sig, max_hamming=8)
 
 
+def _majority_vote_simhash(hashes) -> int:
+    """The SimHash definition, one doc at a time: bit b set when at
+    least half of the shingle hashes set it; 0 for a null or empty hash
+    list. Returned as the signed 64-bit value Spark stores."""
+    if not hashes:
+        return 0
+    sh = 0
+    for b in range(64):
+        if 2 * sum((h >> b) & 1 for h in hashes) >= len(hashes):
+            sh |= 1 << b
+    return sh - (1 << 64) if sh >= 1 << 63 else sh
+
+
+def test_simhash_signatures_equal_majority_vote_reference(spark):
+    """The native signature (explode + scalar xxhash64 + packed per-bit
+    sums) equals the per-doc majority vote over the same shingle hashes
+    on degenerate texts and the sf0.01 documents."""
+    edge = spark.createDataFrame(
+        [
+            (-1, None),
+            (-2, ""),
+            (-3, " \t \n  "),
+            (-4, "word"),
+            (-5, "Grüße aus Köln — 東京 ünïcödé 🙂 STRASSE"),
+            (-6, " ".join(f"tok{i % 977}" for i in range(3000))),
+        ],
+        "id long, t string",
+    )
+    docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet").select(
+        F.col("doc_id").alias("id"), F.col("text").alias("t")
+    )
+    d = edge.unionByName(docs)
+    got = {r.id: r.sh for r in dedup.simhash_signatures(dedup.spread(d, "id")).collect()}
+    hashes = d.select(
+        "id",
+        F.transform(dedup.word_shingles(F.col("t"), 2), lambda s: F.xxhash64(s)).alias("h"),
+    ).collect()
+    want = {r.id: _majority_vote_simhash(r.h) for r in hashes}
+    assert len(want) > 500
+    assert got[-1] == 0  # null text: no shingles
+    assert got == want
+
+
 def test_brute_force_topk_self_is_top1(spark):
     import math
 
@@ -300,7 +343,7 @@ def test_simhash_fast_path_pairs_equal_bruteforce(spark):
     d = dedup.spread(
         docs.select(F.col("doc_id").alias("id"), F.col("text").alias("t")), "id"
     )
-    sig = materialize(d.select("id", dedup.simhash64(F.col("t")).alias("sh")))
+    sig = materialize(dedup.simhash_signatures(d))
     fast = {
         (r.id_a, r.id_b, r.hamming)
         for r in dedup.simhash_pairs_from_sig(

@@ -116,7 +116,7 @@ def test_cc_scrubs_scratch_to_labels_final(spark, tmp_path):
     v, e = _zipf_graph(spark, n=500, hub_deg=50)
     # plus a disjoint 8-vertex path (diameter 7): 8 rounds, so a round
     # lineage cut is written mid-run and must be scrubbed (the hub makes
-    # a hot split: the cut fires every LINEAGE_CUT_EVERY_HOT rounds)
+    # a hot split, 3 label references per round: the cut fires every 4)
     e = e.unionByName(
         spark.createDataFrame(
             [(i, i + 1) for i in range(500, 507)], "id_a long, id_b long"
@@ -209,16 +209,10 @@ def test_minhash_pairs_release_with_their_scope(spark):
 
 
 def test_cc_local_contraction_identical_labels_fewer_rounds(spark):
-    """contract_edges_locally must preserve connectivity exactly (global
-    labels identical to raw-edge CC on both graph shapes) and, on a deep
-    chain graph, cut the iterative phase's round count to roughly the
-    number of partitions a component spans — the 10^12-scale lever: the
-    driver-round floor is diameter-bound, and contraction collapses
-    every within-partition path to depth 1."""
-    from corporate_knowledge_extractor_spark.operators.canonicalize import (
-        contract_edges_locally,
-    )
-
+    """Pointer jumping (local_contract) must preserve connectivity
+    exactly (labels identical to plain CC on both graph shapes) and, on
+    a deep chain graph, cut the round count well below the diameter —
+    the 10^12-scale lever: the driver-round floor is round-bound."""
     spark.catalog.clearCache()
     # deep chains: 960 vertices in chains of 24 (23-hop diameter)
     n, chain = 960, 24
@@ -244,19 +238,9 @@ def test_cc_local_contraction_identical_labels_fewer_rounds(spark):
     )
     assert contracted == plain
     assert plain[:chain] == [(i, 0) for i in range(chain)]
-    # 4 range partitions over near-sorted ids put most chains inside one
-    # partition -> forest depth 1 -> a handful of global rounds vs ~24
     assert rounds_contracted < rounds_plain // 2, (
         rounds_plain, rounds_contracted,
     )
-
-    # the contraction flattens DEPTH, not necessarily count (a chain is
-    # already a forest: V-1 edges in, V-1 out): with everything in ONE
-    # partition, every member points straight at its chain's root —
-    # distinct id_a == number of chains, i.e. per-partition depth 1
-    forest = contract_edges_locally(e, num_partitions=1)
-    assert forest.select("id_a").distinct().count() == n // chain
-    assert forest.count() == e.count()  # same forest size, flat shape
 
     # hub-heavy shape too (the pipeline's own): identical labels
     v2, e2 = _zipf_graph(spark, n=2_000, hub_deg=600)
@@ -274,4 +258,44 @@ def test_cc_local_contraction_identical_labels_fewer_rounds(spark):
     q = sorted((r.entity_id, r.component) for r in c_con.collect())
     c_con.unpersist(blocking=True)
     assert q == p
+    spark.catalog.clearCache()
+
+
+def test_cc_pointer_jumping_closes_shuffled_deep_chains(spark):
+    """Ten 200-vertex chains whose ids are shuffled (real doc ids are
+    hashes, so a near-dup chain's ids come in random order): with
+    local_contract the labels equal a driver-side union-find and CC
+    converges in a handful of rounds — one hop per round would need 200,
+    past MAX_ROUNDS."""
+    import random
+
+    spark.catalog.clearCache()
+    n_chains, length = 10, 200
+    ids = list(range(n_chains * length))
+    random.Random(13).shuffle(ids)
+    chains = [ids[c * length:(c + 1) * length] for c in range(n_chains)]
+    edges = [(ch[i], ch[i + 1]) for ch in chains for i in range(length - 1)]
+    v = spark.createDataFrame([(i,) for i in ids], "entity_id long")
+    e = spark.createDataFrame(edges, "id_a long, id_b long")
+    rounds = []
+    comp = connected_components(
+        v, e, CanonicalizeConfig(local_contract=True),
+        on_iteration=lambda i, c: rounds.append(i),
+    )
+    got = {r.entity_id: r.component for r in comp.collect()}
+    comp.unpersist(blocking=True)
+
+    parent = {i: i for i in ids}
+
+    def root(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = root(a), root(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    assert got == {i: root(i) for i in ids}
+    assert len(rounds) <= 16, len(rounds)
     spark.catalog.clearCache()

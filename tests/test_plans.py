@@ -183,19 +183,20 @@ def test_graph_output_tables_prune_on_canonical_id(spark, tmp_path):
     spark.catalog.clearCache()
 
 
-def test_cc_symmetrize_runs_local_contraction_once(spark):
-    """Symmetrizing the contracted forest must read it once: a union of
-    the forward and reversed projections reuses the range exchange but
-    runs the mapInPandas union-find above it twice."""
+def test_cc_symmetrize_reads_input_once(spark, tmp_path):
+    """Symmetrizing must read its input once: a union of the forward and
+    reversed projections scans (and recomputes) an unmaterialized
+    upstream twice."""
     from corporate_knowledge_extractor_spark.operators.canonicalize import (
         _symmetrize,
-        contract_edges_locally,
     )
 
-    e = spark.createDataFrame(
+    path = str(tmp_path / "edges")
+    spark.createDataFrame(
         [(i, i + 1) for i in range(200)], "id_a long, id_b long"
-    )
-    sym = _symmetrize(contract_edges_locally(e, num_partitions=4))
+    ).write.parquet(path)
+    e = spark.read.parquet(path)
+    sym = _symmetrize(e)
     rows = sym.collect()
     assert len(rows) == 2 * e.count()
     assert {(r.src, r.dst) for r in rows} == {
@@ -203,4 +204,48 @@ def test_cc_symmetrize_runs_local_contraction_once(spark):
     }, "both directions of every edge"
     plan = sym._jdf.queryExecution().executedPlan().toString()
     final = plan.split("== Initial Plan ==")[0]  # AQE prints both plans
-    assert final.count("MapInPandas") == 1, plan
+    assert final.count("FileScan parquet") == 1, plan
+
+
+def _executed_plans(spark, run) -> list[str]:
+    """Final physical plans of every SQL execution ``run()`` starts (CC
+    rounds and lineage cuts included), from the SQL status store."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def executions():
+        bus.waitUntilEmpty()
+        ex = store.executionsList()
+        return {
+            ex.apply(i).executionId(): ex.apply(i).physicalPlanDescription()
+            for i in range(ex.size())
+        }
+
+    before = executions()
+    run()
+    return [p for i, p in executions().items() if i not in before]
+
+
+def test_neardup_path_evaluates_no_python(spark):
+    """MinHash pairs -> near-dup clusters -> SimHash pairs plan no Python
+    evaluation (no pandas UDF, no mapInPandas union-find) in any
+    execution they start, and the SimHash signature has no interpreted
+    lambda."""
+    from corporate_knowledge_extractor_spark.operators import dedup
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    runs = {
+        "minhash_lsh_pairs": lambda: dedup.minhash_lsh_pairs(docs).collect(),
+        "neardup_clusters": lambda: dedup.neardup_clusters(
+            docs, dedup.minhash_lsh_pairs(docs)
+        ).collect(),
+        "simhash_pairs": lambda: dedup.simhash_pairs(docs).collect(),
+    }
+    for name, run in runs.items():
+        plans = _executed_plans(spark, run)
+        spark.catalog.clearCache()
+        assert plans, name
+        python = [p for p in plans if CHECKS["python_eval"].search(p)]
+        assert not python, f"{name} evaluates Python:\n{python[0][:2000]}"
+        if name == "simhash_pairs":
+            assert not [p for p in plans if "lambdafunction" in p], name
